@@ -68,19 +68,38 @@ object Drift {
       .as[Double].select(agg.as[Histogram]).head()
   }
 
-  /** Histograms per partition key in one grouped pass (for per-partition
-    * drift verdicts) — returns (part_id, counts[]) rows.
+  /** The fixed-grid bin of a double column: `floor((v − lo) / width)`
+    * clamped to `[0, bins)` — values outside `[lo, hi)` land in the edge
+    * bins, as in [[HistogramAgg]]. The clamp runs before the int cast, so
+    * an infinite or huge value never overflows it.
     */
-  def histogramPerPartition(df: DataFrame, partCol: String, column: String,
-                            lo: Double, hi: Double, bins: Int = 64): DataFrame = {
-    val width = (hi - lo) / bins
-    val binCol = least(lit(bins - 1),
-      greatest(lit(0), floor((col(column).cast("double") - lo) / width).cast("int")))
-    df.filter(col(column).isNotNull && !isnan(col(column).cast("double")))
-      .groupBy(col(partCol), binCol.as("bin"))
-      .agg(count(lit(1)).as("n"))
-      .groupBy(col(partCol))
-      .agg(map_from_arrays(collect_list(col("bin")), collect_list(col("n"))).as("bin_counts"))
+  def binOf(v: org.apache.spark.sql.Column, lo: Double, hi: Double,
+            bins: Int): org.apache.spark.sql.Column =
+    least(lit(bins - 1L), greatest(lit(0L), floor((v - lit(lo)) / lit((hi - lo) / bins))))
+      .cast("int")
+
+  /** Histograms of `column` over both tables in ONE narrow aggregate:
+    * `groupBy([keys,] side, bin).count()` over the union of the two
+    * projections (side 0 = ref, 1 = cand). Null and NaN values belong to
+    * no bin (the na.drop of [[histogram]]). Returns one (ref, cand)
+    * histogram pair per distinct key tuple; a side with no values reads
+    * as all-zero counts.
+    */
+  def histogramPairs(ref: DataFrame, cand: DataFrame, keys: Seq[String], column: String,
+                     lo: Double, hi: Double, bins: Int): Map[Seq[Any], (Histogram, Histogram)] = {
+    def side(df: DataFrame, tag: Int) = df
+      .select(keys.map(col) :+ col(column).cast("double").as("__v"): _*)
+      .withColumn("__side", lit(tag))
+    val rows = side(ref, 0).unionByName(side(cand, 1))
+      .filter(col("__v").isNotNull && !isnan(col("__v")))
+      .groupBy(keys.map(col) ++ Seq(col("__side"), binOf(col("__v"), lo, hi, bins).as("bin")): _*)
+      .count().collect()
+    val k = keys.size
+    rows.groupBy(r => (0 until k).map(r.get)).map { case (key, rs) =>
+      val counts = Array.fill(2)(new Array[Long](bins))
+      rs.foreach(r => counts(r.getInt(k))(r.getInt(k + 1)) = r.getLong(k + 2))
+      key -> (Histogram(lo, hi, counts(0)), Histogram(lo, hi, counts(1)))
+    }
   }
 
   /** Histograms must share the SAME grid — equal bin counts over
@@ -160,8 +179,7 @@ object Drift {
     def side(df: DataFrame, tag: Int) = df
       .select(col(column).cast("double").as("__v"), lit(tag).as("__side"))
       .filter(col("__v").isNotNull && !isnan(col("__v")))
-    val binCol = least(lit(bins - 1),
-      greatest(lit(0), floor((col("__v") - lit(lo)) / lit(width)).cast("int")))
+    val binCol = binOf(col("__v"), lo, hi, bins)
     val counts = side(expected, 0).unionByName(side(actual, 1))
       .groupBy(binCol.as("bin"))
       .agg(sum(when(col("__side") === 0, 1L).otherwise(0L)).as("cnt_ref"),
@@ -217,8 +235,7 @@ object Drift {
       .select(col(groupCol).cast("string").as("grp"),
         col(column).cast("double").as("__v"), lit(tag).as("__side"))
       .filter(col("__v").isNotNull && !isnan(col("__v")) && col("grp").isNotNull)
-    val binCol = least(lit(bins - 1),
-      greatest(lit(0), floor((col("__v") - lit(lo)) / lit(width)).cast("int")))
+    val binCol = binOf(col("__v"), lo, hi, bins)
     val counts = side(ref, 0).unionByName(side(cand, 1))
       .groupBy(col("grp"), binCol.as("bin"))
       .agg(sum(when(col("__side") === 0, 1L).otherwise(0L)).as("cnt_ref"),
@@ -274,13 +291,11 @@ object Drift {
                 column: String, lo: Double, hi: Double,
                 bins: Int): DataFrame = {
     require(bins > 1 && hi > lo, "groupedKs: need bins > 1 and hi > lo")
-    val width = (hi - lo) / bins
     def side(df: DataFrame, tag: Int) = df
       .select(col(groupCol).cast("string").as("grp"),
         col(column).cast("double").as("__v"), lit(tag).as("__side"))
       .filter(col("__v").isNotNull && !isnan(col("__v")) && col("grp").isNotNull)
-    val binCol = least(lit(bins - 1),
-      greatest(lit(0), floor((col("__v") - lit(lo)) / lit(width)).cast("int")))
+    val binCol = binOf(col("__v"), lo, hi, bins)
     val counts = side(ref, 0).unionByName(side(cand, 1))
       .groupBy(col("grp"), binCol.as("bin"))
       .agg(sum(when(col("__side") === 0, 1L).otherwise(0L)).as("cnt_ref"),
@@ -438,14 +453,11 @@ object Drift {
   def psiTerms(expected: DataFrame, actual: DataFrame, column: String,
                lo: Double, hi: Double, bins: Int): DataFrame = {
     require(bins > 1 && hi > lo, "psiTerms: need bins > 1 and hi > lo")
-    val width = (hi - lo) / bins
     def side(df: DataFrame, tag: Int) = df
       .select(col(column).cast("double").as("__v"), lit(tag).as("__side"))
       .filter(col("__v").isNotNull && !isnan(col("__v")))
-    val binCol = least(lit(bins - 1),
-      greatest(lit(0), floor((col("__v") - lit(lo)) / lit(width)).cast("int")))
     val counts = side(expected, 0).unionByName(side(actual, 1))
-      .groupBy(binCol.as("bin"))
+      .groupBy(binOf(col("__v"), lo, hi, bins).as("bin"))
       .agg(sum(when(col("__side") === 0, 1L).otherwise(0L)).as("cnt_ref"),
         sum(when(col("__side") === 1, 1L).otherwise(0L)).as("cnt_cand"))
     val spark = expected.sparkSession

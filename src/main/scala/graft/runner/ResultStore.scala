@@ -1,6 +1,13 @@
 package graft.runner
 
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.hadoop.ParquetWriter
+import org.apache.parquet.hadoop.metadata.CompressionCodecName
 import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.encoders.{AgnosticEncoder, ExpressionEncoder}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetWriteSupport
+import org.apache.spark.sql.internal.SQLConf
 import graft.model.CheckOutcome
 
 /** Persisted validation metrics — the reference's result tables rebuilt as
@@ -12,9 +19,13 @@ import graft.model.CheckOutcome
   *  - `audit` — STARTED/ENDED/ERROR event log
   *    (`tech.etl_load_audit`, `tech_tables.sql:9-22`)
   *
-  * Rows are tiny (O(checks), never O(data rows)); appends are atomic at the
-  * file level, and every row carries (run_id, part_id) so downstream reads
-  * partition-prune.
+  * Rows are tiny (O(checks), never O(data rows)), so each append is one
+  * parquet file written on the driver — no Spark job — under a hidden temp
+  * name and renamed into the table directory: appends are atomic at the
+  * file level. The footer carries Spark's row schema, so readers resolve
+  * the same schema as for files Spark wrote itself, and directories that
+  * mix both read as one table. Every row carries (run_id, part_id) so
+  * downstream reads partition-prune.
   */
 final case class ValidationRunRow(
     run_id: String,
@@ -56,9 +67,33 @@ class ResultStore(spark: SparkSession, baseDir: String) {
 
   private def append[T <: Product : org.apache.spark.sql.Encoder](
       rows: Seq[T], table: String): Unit =
-    if (rows.nonEmpty)
-      spark.createDataset(rows).coalesce(1)
-        .write.mode("append").parquet(s"$baseDir/$table")
+    if (rows.nonEmpty) {
+      val dir = new Path(s"$baseDir/$table")
+      val name = s"part-${java.util.UUID.randomUUID()}.snappy.parquet"
+      val tmp = new Path(dir, s".$name.tmp")
+      val enc = implicitly[org.apache.spark.sql.Encoder[T]] match {
+        case e: ExpressionEncoder[T] => e
+        case a: AgnosticEncoder[T] => ExpressionEncoder(a)
+      }
+      val toRow = enc.createSerializer()
+      val conf = spark.sessionState.newHadoopConf()
+      // nullable like every file Spark writes, so footers merge cleanly
+      ParquetWriteSupport.setSchema(org.apache.spark.sql.types.StructType(
+        enc.schema.fields.map(_.copy(nullable = true))), conf)
+      val sqlConf = spark.sessionState.conf
+      Seq(SQLConf.PARQUET_WRITE_LEGACY_FORMAT, SQLConf.PARQUET_OUTPUT_TIMESTAMP_TYPE,
+        SQLConf.PARQUET_FIELD_ID_WRITE_ENABLED, SQLConf.PARQUET_ANNOTATE_VARIANT_LOGICAL_TYPE)
+        .foreach(e => conf.set(e.key, sqlConf.getConfString(e.key)))
+      val writer = new ResultStore.RowWriterBuilder(tmp).withConf(conf)
+        .withCompressionCodec(CompressionCodecName.SNAPPY).build()
+      try rows.foreach(r => writer.write(toRow(r)))
+      finally writer.close()
+      val fs = dir.getFileSystem(conf)
+      if (!fs.rename(tmp, new Path(dir, name))) {
+        fs.delete(tmp, false)
+        throw new java.io.IOException(s"result append: rename into $dir failed")
+      }
+    }
 
   def writeReport(runId: String, partId: String, report: ValidationReport,
                   atMs: Long): Unit = {
@@ -199,5 +234,17 @@ class ResultStore(spark: SparkSession, baseDir: String) {
         org.apache.spark.sql.types.NumericType]).map(_.name)
       withAll.na.fill(0, numeric).as[T]
     }
+  }
+}
+
+object ResultStore {
+  /** parquet-hadoop writer over Spark's own row write support, which puts
+    * the `org.apache.spark.sql.parquet.row.metadata` schema in the footer.
+    */
+  private final class RowWriterBuilder(p: Path)
+      extends ParquetWriter.Builder[InternalRow, RowWriterBuilder](p) {
+    override def self(): RowWriterBuilder = this
+    override def getWriteSupport(conf: org.apache.hadoop.conf.Configuration) =
+      new ParquetWriteSupport()
   }
 }

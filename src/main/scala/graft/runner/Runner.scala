@@ -248,8 +248,11 @@ class ValidationSession(spark: SparkSession, cfg: ValidationConfig = ValidationC
     */
   private def keysNonNull = fusedKeys.map(col(_).isNotNull).reduce(_ && _)
 
+  /** The dimension's codecs, deduplicated on the driver: the dimension is
+    * small, and a distinct aggregate would cost a shuffle job per call.
+    */
   private def codecSetOf(dimCodec: DataFrame): Seq[String] =
-    dimCodec.select(col("codec")).distinct().collect().map(_.getString(0)).toSeq
+    dimCodec.select(col("codec")).collect().map(_.getString(0)).toSeq.distinct
 
   /** The dimension collapsed to a broadcast-literal IN set. */
   private def fkViolation(codecSet: Seq[String]) =
@@ -268,33 +271,19 @@ class ValidationSession(spark: SparkSession, cfg: ValidationConfig = ValidationC
     * key. The candidate keeps ORIGINAL column names so predicate checks
     * resolve; reference columns are prefixed.
     */
-  private def fusedJoin(clips: DataFrame, clipsRef: DataFrame,
-                        withDrift: Boolean): DataFrame = {
+  private def fusedJoin(clips: DataFrame, clipsRef: DataFrame): DataFrame = {
     val candCols = clips.columns.filterNot(fusedKeys.contains).map(col)
     val c = clips.select((fusedKeys.map(col) ++ candCols): _*)
       .withColumn("__c", lit(true))
-    val refCols = Seq(col("part_id"), col("clip_id"),
-      col("bytes").as("ref_bytes"), col("transcript").as("ref_transcript")) ++
-      (if (withDrift) Seq(col(cfg.driftColumn).as(s"ref_${cfg.driftColumn}")) else Nil)
-    val r = clipsRef.select(refCols: _*).withColumn("__r", lit(true))
+    val r = clipsRef.select(col("part_id"), col("clip_id"),
+      col("bytes").as("ref_bytes"), col("transcript").as("ref_transcript"))
+      .withColumn("__r", lit(true))
     r.join(c, fusedKeys, "full_outer")
   }
 
-  /** Histogram as `bins` conditional sums: keeps the whole aggregate on the
-    * whole-stage-codegen declarative path (a typed-imperative aggregator
-    * column would demote the entire plan to interpreted ObjectHashAggregate).
-    */
-  private def histAggs(valueCol: String, present: org.apache.spark.sql.Column,
-                       tag: String): Seq[org.apache.spark.sql.Column] = {
-    val bins = cfg.driftBins
-    val width = (cfg.driftHi - cfg.driftLo) / bins
-    val bin = least(lit(bins - 1), greatest(lit(0),
-      floor((col(valueCol).cast("double") - cfg.driftLo) / width).cast("int")))
-    // NaN excluded (floor(NaN) casts to 0 and would inflate bin 0) —
-    // matching the modular Drift.histogram's na.drop semantics
-    (0 until bins).map(i => sum(when(present && col(valueCol).isNotNull &&
-      !isnan(col(valueCol).cast("double")) &&
-      bin === i, 1L).otherwise(0L)).as(s"__${tag}_bin$i"))
+  private def emptyHistograms: (Drift.Histogram, Drift.Histogram) = {
+    def h = Drift.Histogram(cfg.driftLo, cfg.driftHi, new Array[Long](cfg.driftBins))
+    (h, h)
   }
 
   /** Name-based accessor over an aggregate result row: missing-in-schema is
@@ -307,14 +296,9 @@ class ValidationSession(spark: SparkSession, cfg: ValidationConfig = ValidationC
     if (row.isNullAt(i)) 0L else row.getLong(i)
   }
 
-  private def histOf(get: String => Long, tag: String): Drift.Histogram =
-    Drift.Histogram(cfg.driftLo, cfg.driftHi,
-      Array.tabulate(cfg.driftBins)(i => get(s"__${tag}_bin$i")))
-
   /** The mega-aggregate column list: candidate row count, every predicate
     * count, codec FK, reconciliation both ways, PCM + transcript
-    * invariants, and both sides' drift histogram bins — all NAMED; readers
-    * access by field name.
+    * invariants — all NAMED; readers access by field name.
     */
   private def fusedCountAggs(preds: Seq[Check],
                              codecSet: Seq[String]): Seq[org.apache.spark.sql.Column] =
@@ -331,11 +315,7 @@ class ValidationSession(spark: SparkSession, cfg: ValidationConfig = ValidationC
       sum(when(bothPresent && !pcmOk, 1L).otherwise(0L)).as("__pcm_bad")) else Nil) ++
     (if (on("transcript_equality")) Seq(
       sum(when(bothPresent && !(col("ref_transcript") <=> col("transcript")), 1L)
-        .otherwise(0L)).as("__tr_bad")) else Nil) ++
-    (if (driftOn)
-      histAggs(cfg.driftColumn, candPresent, "cand") ++
-        histAggs(s"ref_${cfg.driftColumn}", refPresent, "ref")
-     else Nil)
+        .otherwise(0L)).as("__tr_bad")) else Nil)
 
   /** Outcomes for the count columns produced by [[fusedCountAggs]]
     * (everything except uniqueness and drift, which have their own plans).
@@ -363,7 +343,10 @@ class ValidationSession(spark: SparkSession, cfg: ValidationConfig = ValidationC
       outcome("transcript_equality", RuleGroup.RowInvariant, Severity.Error, get("__tr_bad"))) else Nil)
   }
 
-  private def driftOutcomes(ksV: Double, psiV: Double): Seq[CheckOutcome] = {
+  private def driftOutcomes(hists: (Drift.Histogram, Drift.Histogram)): Seq[CheckOutcome] = {
+    val (refHist, candHist) = hists
+    val ksV = Drift.ks(refHist, candHist)
+    val psiV = Drift.psi(refHist, candHist)
     val ks =
       if (on(driftKsName)) Seq(
         CheckOutcome(driftKsName, RuleGroup.DistributionDrift.toString,
@@ -391,22 +374,19 @@ class ValidationSession(spark: SparkSession, cfg: ValidationConfig = ValidationC
     * pivot (`specs.py:421-426`) extended from predicate checks to the entire
     * suite catalog. The modular `run` issues ~12 Spark jobs (6 suites × 1-2
     * actions), each re-scanning its inputs. This plan reads each table's
-    * heavy `bytes` column EXACTLY ONCE, in TWO concurrent jobs:
+    * heavy `bytes` column EXACTLY ONCE, in THREE concurrent jobs:
     *
     *  A. ONE full-outer join ref↔cand ([[fusedJoin]]) whose single
-    *     aggregate ([[fusedCountAggs]]) evaluates every non-uniqueness
-    *     check and both drift histograms;
-    *  B. the clip_id uniqueness aggregate (key-only columns, tiny shuffle).
+    *     aggregate ([[fusedCountAggs]]) evaluates every check except
+    *     uniqueness and drift;
+    *  B. the clip_id uniqueness aggregate (key-only columns, tiny shuffle);
+    *  C. both drift histograms ([[Drift.histogramPairs]]: the drift
+    *     column only, no join).
     *
     * Reconciliation counts are row-level here (key-level in the modular
     * path) — identical verdicts, and identical counts when clip_id is
-    * unique (which check B enforces). Same caveat for the candidate drift
-    * histogram: the full-outer join emits one row per matching REF row, so
-    * a ref-side duplicate (part_id, clip_id) would count that candidate
-    * value once per duplicate — the reference dataset is assumed
-    * key-unique (it is the ground truth the uniqueness check itself is
-    * graded against); a non-unique ref diverges from the modular
-    * Drift.check, which histograms the candidate table directly.
+    * unique (which check B enforces). Drift histograms come from each
+    * table, as in the modular Drift.check.
     */
   def runFused(clips: DataFrame, dimCodec: DataFrame,
                clipsRef: DataFrame): ValidationReport = {
@@ -417,18 +397,12 @@ class ValidationSession(spark: SparkSession, cfg: ValidationConfig = ValidationC
     val codecSet = codecSetOf(dimCodec)
     val preds = effectiveChecks(clips)
 
-    // A: the mega-join — every non-uniqueness check in one aggregate
-    val fA = Future {
-      val t0 = System.nanoTime()
+    // A: the mega-join — every count check in one aggregate
+    val fA = Future(timed("fused_join") {
       val aggs = fusedCountAggs(preds, codecSet)
-      val row = fusedJoin(clips, clipsRef, withDrift = driftOn)
-        .agg(aggs.head, aggs.tail: _*).head()
-      val get = fieldGetter(row)
-      val outcomes = (structuralOutcomes(clips) ++ fusedCountOutcomes(preds, get))
-        .map(overrideSeverity)
-      (SuiteReport("fused_join", outcomes, (System.nanoTime() - t0) / 1000000L),
-        if (driftOn) Some((histOf(get, "cand"), histOf(get, "ref"))) else None)
-    }
+      val row = fusedJoin(clips, clipsRef).agg(aggs.head, aggs.tail: _*).head()
+      structuralOutcomes(clips) ++ fusedCountOutcomes(preds, fieldGetter(row))
+    })
 
     // B: uniqueness (key-only aggregate; config-disableable like any check)
     val fB =
@@ -438,14 +412,26 @@ class ValidationSession(spark: SparkSession, cfg: ValidationConfig = ValidationC
       }))
       else None
 
-    val (aRep, hists) = Await.result(fA, Duration.Inf)
-    val bRep = fB.map(f => Await.result(f, Duration.Inf))
-    val drift = hists.map { case (candHist, refHist) =>
-      driftOutcomes(Drift.ks(refHist, candHist), Drift.psi(refHist, candHist))
-    }.getOrElse(Nil)
-    ValidationReport(Seq(aRep) ++ bRep.toSeq ++
-      (if (drift.nonEmpty) Seq(SuiteReport("drift", drift, 0L)) else Nil))
+    // C: drift histograms (driftOutcomes applies the severity overrides)
+    val fC =
+      if (driftOn) Some(Future {
+        val t0 = System.nanoTime()
+        val hists = Drift.histogramPairs(clipsRef, clips, Nil, cfg.driftColumn,
+          cfg.driftLo, cfg.driftHi, cfg.driftBins).getOrElse(Nil, emptyHistograms)
+        SuiteReport("drift", driftOutcomes(hists), (System.nanoTime() - t0) / 1000000L)
+      })
+      else None
+
+    try ValidationReport(Await.result(fA, Duration.Inf) +:
+      (fB.toSeq ++ fC.toSeq).map(Await.result(_, Duration.Inf)))
+    finally settle(Seq(fA) ++ fB ++ fC)
   }
+
+  /** Waits for every future, failed or not: no job a verdict submitted may
+    * outlive the verdict, even when a sibling job failed first.
+    */
+  private def settle(fs: Seq[scala.concurrent.Future[_]]): Unit =
+    fs.foreach(f => scala.concurrent.Await.ready(f, scala.concurrent.duration.Duration.Inf))
 
   /** Fused EVIDENCE pass — violation ROWS for every check in ONE scan of
     * the ref↔cand join (the fail_sql twin of [[runFused]]): each surviving
@@ -478,7 +464,7 @@ class ValidationSession(spark: SparkSession, cfg: ValidationConfig = ValidationC
         when(bothPresent && !(col("ref_transcript") <=> col("transcript")),
           lit("transcript_equality"))) else Nil)
     CheckCompiler.violationsFromTags(
-      fusedJoin(clips, clipsRef, withDrift = false), tags, fusedKeys)
+      fusedJoin(clips, clipsRef), tags, fusedKeys)
   }
 
   /** Checkpoint-resumable run: validates only partitions not yet SUCCESS
@@ -562,9 +548,10 @@ class ValidationSession(spark: SparkSession, cfg: ValidationConfig = ValidationC
   /** Scale path for resumable validation: ALL pending partitions validated
     * in ONE grouped fused pass — the mega-aggregate of [[runFused]] grouped
     * by part_id (plus a grouped key-only uniqueness aggregate), yielding one
-    * verdict row per partition from two Spark jobs total, however many
-    * partitions are pending. Per-partition drift uses each partition's own
-    * histogram pair. Checkpoint rows are written in one bulk upsert.
+    * verdict row per partition from three concurrent Spark jobs total,
+    * however many partitions are pending. Per-partition drift uses each
+    * partition's own histogram pair, grouped by part_id in the drift job.
+    * Checkpoint rows are written in one bulk commit.
     *
     * This is what a restarted 10^12-row spark-submit actually needs: the
     * per-partition loop of [[runResumable]] costs a driver-serialized job
@@ -590,10 +577,11 @@ class ValidationSession(spark: SparkSession, cfg: ValidationConfig = ValidationC
     val preds = effectiveChecks(cand)
     val structural = structuralOutcomes(cand)
 
+    val t0 = System.nanoTime()
     // job A: the grouped mega-join aggregate (same shape as runFused's)
     val fA = Future {
       val aggs = fusedCountAggs(preds, codecSet)
-      fusedJoin(cand, ref, withDrift = driftOn)
+      fusedJoin(cand, ref)
         .groupBy(col("part_id"))
         .agg(aggs.head, aggs.tail: _*)
         .collect()
@@ -610,8 +598,19 @@ class ValidationSession(spark: SparkSession, cfg: ValidationConfig = ValidationC
       })
       else None
 
-    val aRows = Await.result(fA, Duration.Inf)
-    val dupByPart = fB.map(f => Await.result(f, Duration.Inf))
+    // job C: per-partition drift histograms
+    val fC =
+      if (driftOn) Some(Future(Drift.histogramPairs(ref, cand, Seq("part_id"), cfg.driftColumn,
+        cfg.driftLo, cfg.driftHi, cfg.driftBins).map {
+        case (key, hists) => labelOf(key.head.asInstanceOf[String]) -> hists
+      }))
+      else None
+
+    val (aRows, dupByPart, histsByPart) =
+      try (Await.result(fA, Duration.Inf), fB.map(Await.result(_, Duration.Inf)),
+        fC.map(Await.result(_, Duration.Inf)))
+      finally settle(Seq(fA) ++ fB ++ fC)
+    val passMs = (System.nanoTime() - t0) / 1000000L
 
     val reports = aRows.filter(r => pendSet.contains(labelOf(r.getString(0)))).map { row =>
       val part = labelOf(row.getString(0))
@@ -622,13 +621,9 @@ class ValidationSession(spark: SparkSession, cfg: ValidationConfig = ValidationC
           CheckOutcome("clip_id_uniqueness", RuleGroup.DuplicateRecords.toString,
             Severity.Error.toString,
             CheckOutcome.status(Severity.Error, dups).toString, dups)
-        }.toSeq ++
-        (if (driftOn) {
-          val candHist = histOf(get, "cand")
-          val refHist = histOf(get, "ref")
-          driftOutcomes(Drift.ks(refHist, candHist), Drift.psi(refHist, candHist))
-        } else Nil)).map(overrideSeverity)
-      part -> (ValidationReport(Seq(SuiteReport("fused_grouped", outcomes, 0L))),
+        }.toSeq).map(overrideSeverity) ++
+        histsByPart.toSeq.flatMap(h => driftOutcomes(h.getOrElse(part, emptyHistograms)))
+      part -> (ValidationReport(Seq(SuiteReport("fused_grouped", outcomes, passMs))),
         get("__rows"))
     }.toMap
 

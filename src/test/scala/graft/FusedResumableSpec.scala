@@ -152,4 +152,43 @@ class FusedResumableSpec extends SparkSpec {
     assert(sess.runResumableFused(ref.toDF(), dim, store, ref.toDF()).isEmpty)
     ref.unpersist()
   }
+
+  test("drift: ref duplicate key + null/NaN/Inf values agree on all three paths") {
+    import org.apache.spark.sql.functions._
+    val s = spark
+    import s.implicits._
+    val base = Synth.clipsRef(spark, 2, 60, maxAudioMs = 400).toDF()
+      .withColumn("dur_ms", col("dur_ms").cast("double")).cache()
+    val ids = base.select("clip_id").as[String].collect().sorted // p0000 first
+    val ref = base
+      .withColumn("dur_ms", when(col("clip_id") === ids(3), lit(Double.NaN))
+        .when(col("clip_id") === ids(64), lit(Double.NegativeInfinity))
+        .otherwise(col("dur_ms")))
+      .unionByName(base.filter(col("clip_id").isin(ids(0), ids(70)))) // duplicate keys
+    val cand = base.withColumn("dur_ms",
+      when(col("clip_id") === ids(1), lit(null).cast("double"))
+        .when(col("clip_id").isin(ids(2), ids(65)), lit(Double.NaN))
+        .when(col("clip_id") === ids(4), lit(Double.PositiveInfinity))
+        .when(col("clip_id").isin(ids.slice(10, 30): _*), col("dur_ms") + 3000)
+        .otherwise(col("dur_ms")))
+    val dim = Synth.dimCodec(spark).toDF()
+    val sess = new ValidationSession(spark, ValidationConfig(driftBins = 16))
+    def drift(rep: graft.runner.ValidationReport) =
+      rep.outcomes.filter(_.checkName.endsWith("_drift"))
+        .map(o => (o.checkName, o.status, o.rowsFailed, o.observedValue)).sortBy(_._1)
+    val modular = drift(sess.run(cand, dim, Some(ref)))
+    assert(modular.map(_._1) == Seq("dur_ms_ks_drift", "dur_ms_psi_drift"))
+    val fused = sess.runFused(cand, dim, ref)
+    assert(drift(fused) == modular)
+    val grouped = sess.runResumableFused(cand, dim, new CheckpointStore(spark, tmp()), ref)
+    assert(grouped.keySet == Set("p0000", "p0001"))
+    // suites that run Spark jobs report their real duration
+    assert((fused.suites ++ grouped.values.flatMap(_.suites)).forall(_.durationMs > 0))
+    grouped.foreach { case (p, rep) =>
+      val one = col("part_id") === p
+      assert(drift(rep) == drift(sess.run(cand.filter(one), dim, Some(ref.filter(one)))),
+        s"partition $p")
+    }
+    base.unpersist()
+  }
 }

@@ -61,28 +61,11 @@ class RunnerSpec extends SparkSpec {
     assert(third.values.forall(_.status == "SUCCESS"))
   }
 
-  test("checkpoint swap interrupted between renames recovers from .bak") {
-    val dir = Files.createTempDirectory("ckpt3").toFile.getAbsolutePath + "/cp"
-    val store = new CheckpointStore(spark, dir)
-    store.markProcessing(Seq("p0000", "p0001"), "v1")
-    store.markDone("p0000", success = true, "v1", "{}")
-    // simulate a crash after the table was moved aside but before the new
-    // one was renamed in: main path gone, complete previous copy at .bak
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    assert(fs.rename(new org.apache.hadoop.fs.Path(dir),
-      new org.apache.hadoop.fs.Path(dir + ".bak")))
-    val recovered = store.readAll().collect().map(c => c.part_id -> c).toMap
-    assert(recovered("p0000").status == "SUCCESS")
-    assert(recovered("p0001").status == "PROCESSING")
-    assert(recovered("p0000").attempts == 1)
-  }
-
-  test("two concurrent checkpoint writers lose no rows (lease claim)") {
+  test("two concurrent checkpoint writers lose no rows (commit log)") {
     val dir = Files.createTempDirectory("ckpt4").toFile.getAbsolutePath + "/cp"
     // two independent stores on the same table — the two-spark-submit
-    // scenario; without the lease their read-merge-swap sequences
-    // interleave and drop each other's rows
+    // scenario; without the create-if-absent publish their read-modify-
+    // write sequences interleave and drop each other's rows
     val a = new CheckpointStore(spark, dir)
     val b = new CheckpointStore(spark, dir)
     val partsA = (0 until 4).map(i => f"a$i%02d")
@@ -99,30 +82,6 @@ class RunnerSpec extends SparkSpec {
     assert(rows.size == 8, s"rows lost: ${rows.keys.toSeq.sorted}")
     partsA.foreach(p => assert(rows(p) == "SUCCESS"))
     partsB.foreach(p => assert(rows(p) == "FAILED"))
-    // both leases released
-    assert(!new java.io.File(dir + ".lock").exists())
-  }
-
-  test("a garbage (empty) lock file from a crashed writer is swept, not a deadlock") {
-    val dir = Files.createTempDirectory("ckpt6").toFile.getAbsolutePath + "/cp"
-    // simulate a crash between lock create and write: empty lock file
-    new java.io.File(dir).getParentFile.mkdirs()
-    assert(new java.io.File(dir + ".lock").createNewFile())
-    val store = new CheckpointStore(spark, dir)
-    store.markProcessing(Seq("p0"), "v1") // must acquire despite the garbage lock
-    assert(store.readAll().collect().map(_.part_id).toSeq == Seq("p0"))
-    assert(!new java.io.File(dir + ".lock").exists())
-  }
-
-  test("orphaned .tmp dirs from a crashed writer are swept on next upsert") {
-    val dir = Files.createTempDirectory("ckpt5").toFile.getAbsolutePath + "/cp"
-    val store = new CheckpointStore(spark, dir)
-    store.markProcessing(Seq("p0"), "v1")
-    val orphan = new java.io.File(dir + ".tmp-deadbeef")
-    assert(orphan.mkdirs())
-    store.markDone("p0", success = true, "v1", "{}")
-    assert(!orphan.exists(), "stale .tmp-* sibling not swept")
-    assert(store.readAll().collect().map(_.part_id).toSeq == Seq("p0"))
   }
 
   test("HTML report renders the snapshot diff (added/removed/changed rows)") {
