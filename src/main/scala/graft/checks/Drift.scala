@@ -511,10 +511,17 @@ object Drift {
     import scala.concurrent.ExecutionContext.Implicits.global
     val fr = Future(histogram(ref, column, lo, hi, bins))
     val fc = Future(histogram(cand, column, lo, hi, bins))
-    val hr = Await.result(fr, Duration.Inf)
-    val hc = Await.result(fc, Duration.Inf)
-    val ksV = ks(hr, hc)
-    val psiV = psi(hr, hc)
+    outcomes(Await.result(fr, Duration.Inf), Await.result(fc, Duration.Inf),
+      column, ksThreshold, psiThreshold)
+  }
+
+  /** The KS + PSI verdict pair for two histograms of `column` on the same
+    * grid: KS above `ksThreshold` fails, PSI above `psiThreshold` warns.
+    */
+  def outcomes(refHist: Histogram, candHist: Histogram, column: String,
+               ksThreshold: Double, psiThreshold: Double = 0.2): Seq[CheckOutcome] = {
+    val ksV = ks(refHist, candHist)
+    val psiV = psi(refHist, candHist)
     Seq(
       CheckOutcome(s"${column}_ks_drift", RuleGroup.DistributionDrift.toString,
         Severity.Error.toString,

@@ -120,8 +120,8 @@ object SchemaCheck {
     * `configure` is applied to the compiled row rules before evaluation —
     * the modular runner passes `EngineConfig.applyTo` here so check-level
     * enable/severity overrides hit schema rules identically on the modular
-    * and fused paths (which fold the same compiled rules into
-    * effectiveChecks).
+    * and fused paths (which fold the same compiled rules into the
+    * runner's check catalog).
     */
   def run(df: DataFrame, spec: SchemaSpec,
           configure: Seq[Check] => Seq[Check] = identity): Seq[CheckOutcome] = {

@@ -61,9 +61,13 @@ object Uniqueness {
             severity: Severity.Severity = Severity.Error,
             salted: Boolean = false): CheckOutcome = {
     val dups = if (salted) duplicateKeysSalted(df, keyCols) else duplicateKeys(df, keyCols)
-    val n = dups.count()
+    outcome(name, keyCols, severity, dups.count())
+  }
+
+  /** The verdict for `n` duplicated keys, however they were counted. */
+  def outcome(name: String, keyCols: Seq[String], severity: Severity.Severity,
+              n: Long): CheckOutcome =
     CheckOutcome(name, RuleGroup.DuplicateRecords.toString, severity.toString,
       CheckOutcome.status(severity, n).toString, n,
       message = if (n > 0) Some(s"$n duplicated key(s) on (${keyCols.mkString(",")})") else None)
-  }
 }

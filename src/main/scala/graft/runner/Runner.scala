@@ -1,6 +1,6 @@
 package graft.runner
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.checks._
 import graft.model._
@@ -44,14 +44,6 @@ final case class ValidationConfig(
     driftHi: Double = 31000.0,
     driftBins: Int = 64,
     ksThreshold: Double = 0.1,
-    /** Collect-all mode only: submit all suites' Spark jobs concurrently
-      * from the driver (Spark schedules them across the same executors).
-      * Removes the driver-side serialization of N independent actions —
-      * at cluster scale the per-job latency floor otherwise dominates
-      * small-partition validation. Ignored when failFast=true (fail-fast
-      * is inherently sequential).
-      */
-    parallelSuites: Boolean = false,
     /** Config-driven registry (reference YAML configs → [[EngineConfig]]):
       * suite-level enable/disable applies to the modular `run` path; check
       * enable + severity overrides apply to the predicate catalog on both
@@ -70,6 +62,7 @@ final case class ValidationConfig(
     schemaSpec: Option[graft.checks.SchemaSpec] = None)
 
 class ValidationSession(spark: SparkSession, cfg: ValidationConfig = ValidationConfig()) {
+  import ValidationSession.CatalogCheck
 
   /** Runtime severity downgrade for checks whose severity is HARD-WIRED in
     * code (codec FK, reconciliation, row invariants, uniqueness, drift,
@@ -89,17 +82,12 @@ class ValidationSession(spark: SparkSession, cfg: ValidationConfig = ValidationC
       case _ => o
     }
 
-  private def timed(suite: String)(body: => Seq[CheckOutcome]): SuiteReport = {
-    val t0 = System.nanoTime()
-    val out = body.map(overrideSeverity)
-    SuiteReport(suite, out, (System.nanoTime() - t0) / 1000000L)
-  }
-
-  /** [[timed]] with per-suite error containment for the modular collect-all
-    * path: a runtime failure in one suite (transient storage error, ...)
-    * records ERROR outcomes for that suite's checks — the reference runner's
-    * behaviour (`validators/runner.py:109-228` audits ERROR and continues) —
-    * instead of discarding every other suite's results with it.
+  /** Times one suite body with per-suite error containment for the modular
+    * collect-all path: a runtime failure in one suite (transient storage
+    * error, ...) records ERROR outcomes for that suite's checks — the
+    * reference runner's behaviour (`validators/runner.py:109-228` audits
+    * ERROR and continues) — instead of discarding every other suite's
+    * results with it.
     */
   private def timedGuard(suite: String, names: Seq[String])
                         (body: => Seq[CheckOutcome]): SuiteReport = {
@@ -120,151 +108,142 @@ class ValidationSession(spark: SparkSession, cfg: ValidationConfig = ValidationC
 
   /** Run every suite over one table (optionally vs a reference table for
     * reconciliation / row invariants / drift). Narrow projections keep the
-    * bytes column out of every suite except rowinvariant.
+    * bytes column out of every suite except rowinvariant. The built-in
+    * suites take their check names and enablement from [[catalog]].
     */
   def run(clips: DataFrame, dimCodec: DataFrame,
           clipsRef: Option[DataFrame] = None): ValidationReport = {
     val noBytes = clips.drop("bytes")
     val preds = cfg.engineConfig.applyTo(cfg.predicateChecks)
+    // names and suites only: no violation column is evaluated here, so the
+    // codec FK needs no dimension collect
+    val names = catalog(clips, codecSet = Nil).groupBy(_.suite)
+      .map { case (s, cs) => s -> cs.map(_.name) }.withDefaultValue(Nil)
+    // every check can be config-disabled BY NAME (the reference's
+    // validation overrides) — an all-disabled suite is dropped, and
+    // multi-check suite bodies filter their outcomes to the enabled set
+    def suite(name: String, checks: Seq[String])(body: => Seq[CheckOutcome]) =
+      if (checks.isEmpty) Nil else Seq((name, checks, () => body))
 
     val allSuites: Seq[(String, Seq[String], () => Seq[CheckOutcome])] =
       cfg.schemaSpec.toSeq.map(spec =>
         ("schema", spec.fields.map(_.name),
-          // config registry applies to the compiled schema row rules here
-          // exactly as effectiveChecks applies it on the fused paths
+          // the config registry applies to the compiled schema row rules
+          // here exactly as catalog applies it on the fused paths
           () => SchemaCheck.run(clips, spec, cfg.engineConfig.applyTo))) ++
-      // every check can be config-disabled BY NAME (the reference's
-      // validation overrides) — an all-disabled suite is dropped, and
-      // multi-check suite bodies filter their outcomes to the enabled set
-      (if (preds.isEmpty) Nil else Seq(
-        ("predicate", preds.map(_.name),
-          () => CheckCompiler.run(clips, preds)))) ++
-      (if (on("clip_id_uniqueness")) Seq(
-        ("uniqueness", Seq("clip_id_uniqueness"),
-          () => Seq(Uniqueness.check(noBytes, Seq("clip_id"), "clip_id_uniqueness")))) else Nil) ++
-      (if (on("codec_fk")) Seq(
-        ("referential", Seq("codec_fk"),
-          () => Seq(Referential.check(noBytes, dimCodec, Seq("codec"), Seq("codec"), "codec_fk")))) else Nil) ++
+      suite("predicate", preds.map(_.name))(CheckCompiler.run(clips, preds)) ++
+      suite("uniqueness", Seq(UniquenessCheck).filter(on))(
+        Seq(Uniqueness.check(noBytes, Seq("clip_id"), UniquenessCheck))) ++
+      suite("referential", names("referential"))(names("referential").map(
+        Referential.check(noBytes, dimCodec, Seq("codec"), Seq("codec"), _))) ++
       clipsRef.toSeq.flatMap { ref =>
-        val recNames = Seq("clips_completeness", "clips_exclusivity").filter(on)
-        val rowNames = Seq("pcm_allclose", "transcript_equality").filter(on)
+        val recNames = names("reconciliation")
+        val rowNames = names("rowinvariant")
         val driftNames = Seq(driftKsName, driftPsiName).filter(on)
-        (if (recNames.nonEmpty) Seq(
-          ("reconciliation", recNames,
-            () => Reconcile.check(ref.drop("bytes"), noBytes, Seq("part_id", "clip_id"), "clips")
-              .outcomes.filter(o => recNames.contains(o.checkName)))) else Nil) ++
-        (if (rowNames.nonEmpty) Seq(
-          ("rowinvariant", rowNames,
-            // pass the toggles down: a disabled pcm_allclose must skip the
-            // decode+SNR pass entirely, not compute-and-discard it
-            () => RowInvariant.check(ref, clips, cfg.minSnrDb,
-              computePcm = rowNames.contains("pcm_allclose"),
-              computeTranscript = rowNames.contains("transcript_equality")))) else Nil) ++
-        (if (driftNames.nonEmpty) Seq(
-          ("drift", driftNames,
-            () => Drift.check(ref.drop("bytes"), noBytes, cfg.driftColumn,
-              cfg.driftLo, cfg.driftHi, cfg.driftBins, cfg.ksThreshold)
-              .filter(o => driftNames.contains(o.checkName)))) else Nil)
+        suite("reconciliation", recNames)(
+          Reconcile.check(ref.drop("bytes"), noBytes, Seq("part_id", "clip_id"), "clips")
+            .outcomes.filter(o => recNames.contains(o.checkName))) ++
+        // pass the toggles down: a disabled pcm_allclose must skip the
+        // decode+SNR pass entirely, not compute-and-discard it
+        suite("rowinvariant", rowNames)(RowInvariant.check(ref, clips, cfg.minSnrDb,
+          computePcm = rowNames.contains(PcmCheck),
+          computeTranscript = rowNames.contains(TranscriptCheck))) ++
+        suite("drift", driftNames)(
+          Drift.check(ref.drop("bytes"), noBytes, cfg.driftColumn,
+            cfg.driftLo, cfg.driftHi, cfg.driftBins, cfg.ksThreshold)
+            .filter(o => driftNames.contains(o.checkName)))
       }
     // config-driven suite enable/disable (validators/configs/*.yml analogue)
     val suites = allSuites.filter { case (name, _, _) =>
       cfg.engineConfig.suiteEnabled(name) }
 
-    if (cfg.parallelSuites && !cfg.failFast) {
-      // submit every suite's jobs concurrently — Spark's scheduler shares
-      // the executors; the driver no longer serializes independent actions
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.duration.Duration
-      import scala.concurrent.ExecutionContext.Implicits.global
-      val futures = suites.map { case (name, names, body) =>
-        Future(timedGuard(name, names)(body())) }
-      ValidationReport(Await.result(Future.sequence(futures), Duration.Inf))
-    } else {
-      var failed = false
-      val reports = scala.collection.mutable.ArrayBuffer[SuiteReport]()
-      suites.foreach { case (name, skipNames, body) =>
-        if (cfg.failFast && failed) reports += skip(name, skipNames)
-        else {
-          val r = timedGuard(name, skipNames)(body())
-          reports += r
-          if (r.failed) failed = true
-        }
+    var failed = false
+    val reports = scala.collection.mutable.ArrayBuffer[SuiteReport]()
+    suites.foreach { case (name, skipNames, body) =>
+      if (cfg.failFast && failed) reports += skip(name, skipNames)
+      else {
+        val r = timedGuard(name, skipNames)(body())
+        reports += r
+        if (r.failed) failed = true
       }
-      ValidationReport(reports.toSeq)
     }
+    ValidationReport(reports.toSeq)
   }
 
-  // ==== shared fused-plan building blocks ===================================
+  // ==== the check catalog ====================================================
 
-  /** The row-rule catalog every fused plan evaluates: configured predicate
-    * checks PLUS the declared schema's compiled row rules (when schemaSpec
-    * is set), both filtered/overridden by the config registry — keeps the
-    * modular and fused paths in three-way agreement on schema semantics.
-    * (The schema dup-key WARNING is a group property; in fused plans it is
-    * covered by the clip_id uniqueness check when uniqueKey == clip_id.)
-    */
-  private def effectiveChecks(df: DataFrame): Seq[Check] = {
-    val all = cfg.engineConfig.applyTo(cfg.predicateChecks ++
-      cfg.schemaSpec.toSeq.flatMap(SchemaCheck.compile(df, _)))
-    // check names are GLOBAL identifiers (config registry, result tables,
-    // and the fused aggregate's named columns all key on them) — duplicate
-    // names would silently alias two counts onto one fused field
-    val dups = all.groupBy(_.name).filter(_._2.size > 1).keys
-    require(dups.isEmpty,
-      s"duplicate check name(s): ${dups.mkString(",")} — a predicate check " +
-        "and a schema-compiled rule share a name; rename one")
-    all
-  }
-
-  /** Structural declared-schema findings (missing/extra columns) — pure
-    * metadata, evaluated driver-side in every fused verdict path.
-    */
-  private def structuralOutcomes(df: DataFrame): Seq[CheckOutcome] =
-    cfg.schemaSpec.toSeq.flatMap(SchemaCheck.structural(df, _))
-
-  /** Check-level config enablement for the BUILT-IN (non-predicate) checks
-    * — codec FK, reconciliation directions, row invariants, uniqueness,
-    * drift. The reference's validation overrides can disable ANY check by
-    * name (`experiments/run.py` `*_validation_overrides`); the predicate
-    * catalog already honors this via [[effectiveChecks]], and these
-    * helpers extend the same registry to the hard-wired fused columns so
-    * the modular and fused paths agree under any config.
+  /** Check-level config enablement. The reference's validation overrides
+    * can disable ANY check by name (`experiments/run.py`
+    * `*_validation_overrides`): predicate checks, schema row rules, the
+    * built-ins, uniqueness and drift alike.
     */
   private def on(name: String): Boolean = cfg.engineConfig.checkEnabled(name)
   private def driftKsName = s"${cfg.driftColumn}_ks_drift"
   private def driftPsiName = s"${cfg.driftColumn}_psi_drift"
   private def driftOn: Boolean = on(driftKsName) || on(driftPsiName)
 
+  private val UniquenessCheck = "clip_id_uniqueness"
+  private val PcmCheck = "pcm_allclose"
+  private val TranscriptCheck = "transcript_equality"
+
   private val fusedKeys = Seq("part_id", "clip_id")
-  private def candPresent = col("__c").isNotNull
-  private def refPresent = col("__r").isNotNull
-  private def bothPresent = refPresent && candPresent
-  /** Reconciliation is NULL-EXEMPT like the reference's key checks
-    * (`fact_match_fk.py:23`, `areas_uniqueness.py:36`) and the modular
-    * [[Reconcile.check]]: a row whose join key is null can never be
-    * matched, and counting it as missing/extra would misclassify what is
-    * really a missing-value problem — the part_id/clip_id not-null
-    * predicate checks flag those rows instead.
+
+  /** The check catalog: every row rule, defined once for every runner path.
+    * It holds the configured predicate checks and the declared schema's
+    * compiled row rules, then the built-in codec FK, reconciliation and row
+    * invariants. The fused aggregate, its outcomes and the evidence tags
+    * are maps over it; the modular `run` reads the built-in suites' names
+    * from it. Config-disabled checks are left out here, once; severity
+    * overrides apply to every outcome through [[overrideSeverity]].
+    *
+    * Check names are GLOBAL identifiers (config registry, result tables and
+    * the fused aggregate's column aliases all key on them), so a name used
+    * twice — or a name taken by the row count, uniqueness or drift — is
+    * rejected instead of producing two outcomes under one name.
+    *
+    * `codecSet` feeds only the codec FK's violation column.
     */
-  private def keysNonNull = fusedKeys.map(col(_).isNotNull).reduce(_ && _)
+  private def catalog(clips: DataFrame, codecSet: Seq[String]): Seq[CatalogCheck] = {
+    val candPresent = col("__c").isNotNull
+    val bothPresent = col("__r").isNotNull && candPresent
+    // Reconciliation is NULL-EXEMPT like the reference's key checks
+    // (`fact_match_fk.py:23`, `areas_uniqueness.py:36`) and the modular
+    // Reconcile.check: a row whose join key is null can never be matched,
+    // and counting it as missing/extra would misclassify what is really a
+    // missing-value problem — the part_id/clip_id not-null predicate
+    // checks flag those rows instead.
+    val keysNonNull = fusedKeys.map(col(_).isNotNull).reduce(_ && _)
+    // identical bytes skip the decode; null bytes fall through to pcm_snr,
+    // which returns -Inf (always a violation) — RowInvariant.compare semantics
+    val pcmOk = (col("ref_bytes").isNotNull && (col("ref_bytes") <=> col("bytes"))) ||
+      RowInvariant.snrColumn(col("ref_bytes"), col("bytes")) >= cfg.minSnrDb
+    def rowRules(suite: String, checks: Seq[Check]) = checks.map(c =>
+      CatalogCheck(c.name, suite, c.ruleGroup, c.severity, candPresent && c.violation))
+    val all = rowRules("predicate", cfg.predicateChecks) ++
+      rowRules("schema", cfg.schemaSpec.toSeq.flatMap(SchemaCheck.compile(clips, _))) ++ Seq(
+        // the dimension collapsed to a broadcast-literal IN set
+        CatalogCheck("codec_fk", "referential", RuleGroup.ReferentialIntegrity, Severity.Error,
+          candPresent && (col("codec").isNotNull && !col("codec").isin(codecSet: _*))),
+        CatalogCheck("clips_completeness", "reconciliation", RuleGroup.Reconciliation,
+          Severity.Error, col("__c").isNull && keysNonNull),
+        CatalogCheck("clips_exclusivity", "reconciliation", RuleGroup.Reconciliation,
+          Severity.Warning, col("__r").isNull && keysNonNull),
+        CatalogCheck(PcmCheck, "rowinvariant", RuleGroup.RowInvariant, Severity.Error,
+          bothPresent && !pcmOk, expected = Some(s"SNR >= ${cfg.minSnrDb} dB")),
+        CatalogCheck(TranscriptCheck, "rowinvariant", RuleGroup.RowInvariant, Severity.Error,
+          bothPresent && !(col("ref_transcript") <=> col("transcript"))))
+    val dups = (all.map(_.name) ++ Seq("__rows", UniquenessCheck, driftKsName, driftPsiName))
+      .groupBy(identity).filter(_._2.size > 1).keys
+    require(dups.isEmpty,
+      s"duplicate check name(s): ${dups.mkString(",")} — two checks share a name; rename one")
+    all.filter(c => on(c.name))
+  }
 
   /** The dimension's codecs, deduplicated on the driver: the dimension is
     * small, and a distinct aggregate would cost a shuffle job per call.
     */
   private def codecSetOf(dimCodec: DataFrame): Seq[String] =
     dimCodec.select(col("codec")).collect().map(_.getString(0)).toSeq.distinct
-
-  /** The dimension collapsed to a broadcast-literal IN set. */
-  private def fkViolation(codecSet: Seq[String]) =
-    col("codec").isNotNull && !col("codec").isin(codecSet: _*)
-
-  /** Identical-bytes short-circuit skips decode; null bytes fall through to
-    * pcm_snr which returns -Inf (always a violation) — RowInvariant.compare
-    * semantics.
-    */
-  private def pcmOk =
-    (col("ref_bytes").isNotNull && (col("ref_bytes") <=> col("bytes"))) ||
-      RowInvariant.snrColumn(col("ref_bytes"), col("bytes")) >= cfg.minSnrDb
 
   /** Full-outer ref↔cand join on (part_id, clip_id) — shuffle-free and
     * sort-free when both tables are bucketed/storage-partitioned on the
@@ -281,150 +260,85 @@ class ValidationSession(spark: SparkSession, cfg: ValidationConfig = ValidationC
     r.join(c, fusedKeys, "full_outer")
   }
 
-  private def emptyHistograms: (Drift.Histogram, Drift.Histogram) = {
-    def h = Drift.Histogram(cfg.driftLo, cfg.driftHi, new Array[Long](cfg.driftBins))
-    (h, h)
-  }
+  // ==== the fused pass ========================================================
 
-  /** Name-based accessor over an aggregate result row: missing-in-schema is
-    * a bug (throws), null cell (empty input) reads 0. All fused-row reads go
-    * through names — positional offset arithmetic breaks silently when the
-    * aggregate list changes shape.
-    */
-  private def fieldGetter(row: org.apache.spark.sql.Row): String => Long = { n =>
-    val i = row.fieldIndex(n)
-    if (row.isNullAt(i)) 0L else row.getLong(i)
-  }
-
-  /** The mega-aggregate column list: candidate row count, every predicate
-    * count, codec FK, reconciliation both ways, PCM + transcript
-    * invariants — all NAMED; readers access by field name.
-    */
-  private def fusedCountAggs(preds: Seq[Check],
-                             codecSet: Seq[String]): Seq[org.apache.spark.sql.Column] =
-    Seq(sum(when(candPresent, 1L).otherwise(0L)).as("__rows")) ++
-    preds.map(cc =>
-      sum(when(candPresent && cc.violation, 1L).otherwise(0L)).as(cc.name)) ++
-    (if (on("codec_fk")) Seq(
-      sum(when(candPresent && fkViolation(codecSet), 1L).otherwise(0L)).as("__fk")) else Nil) ++
-    (if (on("clips_completeness")) Seq(
-      sum(when(col("__c").isNull && keysNonNull, 1L).otherwise(0L)).as("__missing")) else Nil) ++
-    (if (on("clips_exclusivity")) Seq(
-      sum(when(col("__r").isNull && keysNonNull, 1L).otherwise(0L)).as("__extra")) else Nil) ++
-    (if (on("pcm_allclose")) Seq(
-      sum(when(bothPresent && !pcmOk, 1L).otherwise(0L)).as("__pcm_bad")) else Nil) ++
-    (if (on("transcript_equality")) Seq(
-      sum(when(bothPresent && !(col("ref_transcript") <=> col("transcript")), 1L)
-        .otherwise(0L)).as("__tr_bad")) else Nil)
-
-  /** Outcomes for the count columns produced by [[fusedCountAggs]]
-    * (everything except uniqueness and drift, which have their own plans).
-    */
-  private def fusedCountOutcomes(preds: Seq[Check],
-                                 get: String => Long): Seq[CheckOutcome] = {
-    def outcome(name: String, group: RuleGroup.RuleGroup,
-                sev: Severity.Severity, n: Long,
-                expected: Option[String] = None): CheckOutcome =
-      CheckOutcome(name, group.toString, sev.toString,
-        CheckOutcome.status(sev, n).toString, n, expectedValue = expected)
-    preds.map { cc =>
-      outcome(cc.name, cc.ruleGroup, cc.severity, get(cc.name))
-    } ++
-    (if (on("codec_fk")) Seq(
-      outcome("codec_fk", RuleGroup.ReferentialIntegrity, Severity.Error, get("__fk"))) else Nil) ++
-    (if (on("clips_completeness")) Seq(
-      outcome("clips_completeness", RuleGroup.Reconciliation, Severity.Error, get("__missing"))) else Nil) ++
-    (if (on("clips_exclusivity")) Seq(
-      outcome("clips_exclusivity", RuleGroup.Reconciliation, Severity.Warning, get("__extra"))) else Nil) ++
-    (if (on("pcm_allclose")) Seq(
-      outcome("pcm_allclose", RuleGroup.RowInvariant, Severity.Error, get("__pcm_bad"),
-        expected = Some(s"SNR >= ${cfg.minSnrDb} dB"))) else Nil) ++
-    (if (on("transcript_equality")) Seq(
-      outcome("transcript_equality", RuleGroup.RowInvariant, Severity.Error, get("__tr_bad"))) else Nil)
-  }
-
-  private def driftOutcomes(hists: (Drift.Histogram, Drift.Histogram)): Seq[CheckOutcome] = {
-    val (refHist, candHist) = hists
-    val ksV = Drift.ks(refHist, candHist)
-    val psiV = Drift.psi(refHist, candHist)
-    val ks =
-      if (on(driftKsName)) Seq(
-        CheckOutcome(driftKsName, RuleGroup.DistributionDrift.toString,
-          Severity.Error.toString,
-          (if (ksV > cfg.ksThreshold) CheckStatus.FAIL else CheckStatus.PASS).toString,
-          if (ksV > cfg.ksThreshold) 1L else 0L,
-          observedValue = Some(String.format(java.util.Locale.ROOT, "%.6f",
-            Double.box(ksV))), expectedValue = Some(s"<= ${cfg.ksThreshold}")))
-      else Nil
-    val psi =
-      if (on(driftPsiName)) Seq(
-        CheckOutcome(driftPsiName, RuleGroup.DistributionDrift.toString,
-          Severity.Warning.toString,
-          (if (psiV > 0.2) CheckStatus.WARN else CheckStatus.PASS).toString,
-          if (psiV > 0.2) 1L else 0L,
-          observedValue = Some(String.format(java.util.Locale.ROOT, "%.6f",
-            Double.box(psiV))), expectedValue = Some("<= 0.2")))
-      else Nil
-    (ks ++ psi).map(overrideSeverity)
-  }
-
-  // ==== fused entry points ===================================================
-
-  /** FUSED whole-engine pass — the C16 "one statement evaluates every check"
-    * pivot (`specs.py:421-426`) extended from predicate checks to the entire
-    * suite catalog. The modular `run` issues ~12 Spark jobs (6 suites × 1-2
-    * actions), each re-scanning its inputs. This plan reads each table's
-    * heavy `bytes` column EXACTLY ONCE, in THREE concurrent jobs:
+  /** The fused pass behind both fused entry points: every check over one
+    * read of each table's heavy `bytes` column, in THREE concurrent jobs,
+    * each grouped by `keys` (Nil: one group for the whole input):
     *
     *  A. ONE full-outer join ref↔cand ([[fusedJoin]]) whose single
-    *     aggregate ([[fusedCountAggs]]) evaluates every check except
-    *     uniqueness and drift;
+    *     aggregate evaluates the whole [[catalog]] plus the candidate row
+    *     count;
     *  B. the clip_id uniqueness aggregate (key-only columns, tiny shuffle);
     *  C. both drift histograms ([[Drift.histogramPairs]]: the drift
     *     column only, no join).
     *
-    * Reconciliation counts are row-level here (key-level in the modular
-    * path) — identical verdicts, and identical counts when clip_id is
-    * unique (which check B enforces). Drift histograms come from each
-    * table, as in the modular Drift.check.
+    * Returns, per group of job A (the full-outer join yields a group for
+    * every key on either side), its key values, its candidate row count and
+    * the suites `fused_join` (structural schema findings, then the catalog),
+    * `uniqueness` and `drift` — the last two when enabled — each timed by
+    * its own job. Every future is settled before this returns or throws.
     */
-  def runFused(clips: DataFrame, dimCodec: DataFrame,
-               clipsRef: DataFrame): ValidationReport = {
+  private def fusedPass(cand: DataFrame, dimCodec: DataFrame, ref: DataFrame,
+                        keys: Seq[String]): Seq[(Seq[Any], Long, Seq[SuiteReport])] = {
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration.Duration
     import scala.concurrent.ExecutionContext.Implicits.global
+    def timed[T](body: => T): Future[(T, Long)] = Future {
+      val t0 = System.nanoTime()
+      val out = body
+      (out, (System.nanoTime() - t0) / 1000000L)
+    }
+    def keyOf(r: Row): Seq[Any] = keys.indices.map(r.get)
+    def longAt(r: Row, i: Int): Long = if (r.isNullAt(i)) 0L else r.getLong(i)
 
-    val codecSet = codecSetOf(dimCodec)
-    val preds = effectiveChecks(clips)
-
-    // A: the mega-join — every count check in one aggregate
-    val fA = Future(timed("fused_join") {
-      val aggs = fusedCountAggs(preds, codecSet)
-      val row = fusedJoin(clips, clipsRef).agg(aggs.head, aggs.tail: _*).head()
-      structuralOutcomes(clips) ++ fusedCountOutcomes(preds, fieldGetter(row))
-    })
-
-    // B: uniqueness (key-only aggregate; config-disableable like any check)
+    val checks = catalog(cand, codecSetOf(dimCodec))
+    val structural = cfg.schemaSpec.toSeq.flatMap(SchemaCheck.structural(cand, _))
+    val aggs = sum(when(col("__c").isNotNull, 1L).otherwise(0L)).as("__rows") +:
+      checks.map(c => sum(when(c.violation, 1L).otherwise(0L)).as(c.name))
+    val fA = timed(fusedJoin(cand, ref).groupBy(keys.map(col): _*)
+      .agg(aggs.head, aggs.tail: _*).collect())
     val fB =
-      if (on("clip_id_uniqueness")) Some(Future(timed("uniqueness") {
-        Seq(Uniqueness.check(clips.select("part_id", "clip_id"),
-          Seq("clip_id"), "clip_id_uniqueness"))
-      }))
+      if (on(UniquenessCheck)) Some(timed(
+        cand.select((keys :+ "clip_id").map(col): _*).filter(col("clip_id").isNotNull)
+          .groupBy((keys :+ "clip_id").map(col): _*).agg(count(lit(1)).as("__n"))
+          .groupBy(keys.map(col): _*)
+          .agg(sum(when(col("__n") > 1, 1L).otherwise(0L)).as("dups"))
+          .collect()))
       else None
-
-    // C: drift histograms (driftOutcomes applies the severity overrides)
     val fC =
-      if (driftOn) Some(Future {
-        val t0 = System.nanoTime()
-        val hists = Drift.histogramPairs(clipsRef, clips, Nil, cfg.driftColumn,
-          cfg.driftLo, cfg.driftHi, cfg.driftBins).getOrElse(Nil, emptyHistograms)
-        SuiteReport("drift", driftOutcomes(hists), (System.nanoTime() - t0) / 1000000L)
-      })
+      if (driftOn) Some(timed(Drift.histogramPairs(ref, cand, keys, cfg.driftColumn,
+        cfg.driftLo, cfg.driftHi, cfg.driftBins)))
       else None
 
-    try ValidationReport(Await.result(fA, Duration.Inf) +:
-      (fB.toSeq ++ fC.toSeq).map(Await.result(_, Duration.Inf)))
-    finally settle(Seq(fA) ++ fB ++ fC)
+    val ((aRows, aMs), b, c) =
+      try (Await.result(fA, Duration.Inf), fB.map(Await.result(_, Duration.Inf)),
+        fC.map(Await.result(_, Duration.Inf)))
+      finally settle(Seq(fA) ++ fB ++ fC)
+    val dupsByKey = b.map { case (rows, ms) =>
+      (rows.map(r => keyOf(r) -> longAt(r, keys.size)).toMap, ms) }
+    val zero = Drift.Histogram(cfg.driftLo, cfg.driftHi, new Array[Long](cfg.driftBins))
+    def suite(name: String, outcomes: Seq[CheckOutcome], ms: Long) =
+      SuiteReport(name, outcomes.map(overrideSeverity), ms)
+
+    aRows.toSeq.map { row =>
+      val key = keyOf(row)
+      val joined = structural ++ checks.map { cc =>
+        val n = longAt(row, row.fieldIndex(cc.name))
+        CheckOutcome(cc.name, cc.group.toString, cc.severity.toString,
+          CheckOutcome.status(cc.severity, n).toString, n, expectedValue = cc.expected)
+      }
+      val uniqueness = dupsByKey.map { case (byKey, ms) => suite("uniqueness", Seq(
+        Uniqueness.outcome(UniquenessCheck, Seq("clip_id"), Severity.Error,
+          byKey.getOrElse(key, 0L))), ms) }
+      val drift = c.map { case (byKey, ms) =>
+        val (refHist, candHist) = byKey.getOrElse(key, (zero, zero))
+        suite("drift", Drift.outcomes(refHist, candHist, cfg.driftColumn, cfg.ksThreshold)
+          .filter(o => on(o.checkName)), ms)
+      }
+      (key, longAt(row, row.fieldIndex("__rows")),
+        Seq(suite("fused_join", joined, aMs)) ++ uniqueness ++ drift)
+    }
   }
 
   /** Waits for every future, failed or not: no job a verdict submitted may
@@ -433,39 +347,42 @@ class ValidationSession(spark: SparkSession, cfg: ValidationConfig = ValidationC
   private def settle(fs: Seq[scala.concurrent.Future[_]]): Unit =
     fs.foreach(f => scala.concurrent.Await.ready(f, scala.concurrent.duration.Duration.Inf))
 
-  /** Fused EVIDENCE pass — violation ROWS for every check in ONE scan of
-    * the ref↔cand join (the fail_sql twin of [[runFused]]): each surviving
-    * row carries the array of check names it violates, exploded to
-    * (part_id, clip_id, check_name). At 10^12 rows this replaces one
-    * fail_sql job per failed check with a single pass; output volume is
-    * O(violations), and callers bound it further with a limit.
+  // ==== fused entry points ===================================================
+
+  /** FUSED whole-engine pass — the C16 "one statement evaluates every check"
+    * pivot (`specs.py:421-426`) extended from predicate checks to the entire
+    * suite catalog: [[fusedPass]] over the whole input. The modular `run`
+    * issues ~12 Spark jobs (6 suites × 1-2 actions), each re-scanning its
+    * inputs; this plan reads each table's heavy `bytes` column EXACTLY ONCE,
+    * in three concurrent jobs reported as the suites `fused_join`,
+    * `uniqueness` and `drift`.
     *
-    * Covers predicate checks, codec FK, the PCM/transcript row invariants,
-    * and both reconciliation directions (missing rows tagged
-    * clips_completeness, extras clips_exclusivity). Uniqueness evidence
-    * stays on its own key-only plan ([[Uniqueness.duplicateKeys]]) — it is
-    * a group property, not a row predicate.
+    * Reconciliation counts are row-level here (key-level in the modular
+    * path) — identical verdicts, and identical counts when clip_id is
+    * unique (which the uniqueness job enforces). Drift histograms come from
+    * each table, as in the modular Drift.check.
+    */
+  def runFused(clips: DataFrame, dimCodec: DataFrame,
+               clipsRef: DataFrame): ValidationReport =
+    ValidationReport(fusedPass(clips, dimCodec, clipsRef, Nil).head._3)
+
+  /** Fused EVIDENCE pass — violation ROWS for every [[catalog]] check in
+    * ONE scan of the ref↔cand join (the fail_sql twin of [[runFused]]):
+    * each surviving row carries the array of check names it violates,
+    * exploded to (part_id, clip_id, check_name). At 10^12 rows this
+    * replaces one fail_sql job per failed check with a single pass; output
+    * volume is O(violations), and callers bound it further with a limit.
+    *
+    * A row missing from the candidate is tagged clips_completeness, an
+    * extra one clips_exclusivity. Uniqueness evidence stays on its own
+    * key-only plan ([[Uniqueness.duplicateKeys]]) — it is a group
+    * property, not a row predicate.
     */
   def fusedViolations(clips: DataFrame, dimCodec: DataFrame,
-                      clipsRef: DataFrame): DataFrame = {
-    val codecSet = codecSetOf(dimCodec)
-    val preds = effectiveChecks(clips)
-    val tags =
-      preds.map(cc => when(candPresent && cc.violation, lit(cc.name))) ++
-      (if (on("codec_fk")) Seq(
-        when(candPresent && fkViolation(codecSet), lit("codec_fk"))) else Nil) ++
-      (if (on("clips_completeness")) Seq(
-        when(col("__c").isNull && keysNonNull, lit("clips_completeness"))) else Nil) ++
-      (if (on("clips_exclusivity")) Seq(
-        when(col("__r").isNull && keysNonNull, lit("clips_exclusivity"))) else Nil) ++
-      (if (on("pcm_allclose")) Seq(
-        when(bothPresent && !pcmOk, lit("pcm_allclose"))) else Nil) ++
-      (if (on("transcript_equality")) Seq(
-        when(bothPresent && !(col("ref_transcript") <=> col("transcript")),
-          lit("transcript_equality"))) else Nil)
-    CheckCompiler.violationsFromTags(
-      fusedJoin(clips, clipsRef), tags, fusedKeys)
-  }
+                      clipsRef: DataFrame): DataFrame =
+    CheckCompiler.violationsFromTags(fusedJoin(clips, clipsRef),
+      catalog(clips, codecSetOf(dimCodec)).map(c => when(c.violation, lit(c.name))),
+      fusedKeys)
 
   /** Checkpoint-resumable run: validates only partitions not yet SUCCESS
     * under cfg.ruleVersion, one partition at a time (partition pruning via
@@ -497,9 +414,9 @@ class ValidationSession(spark: SparkSession, cfg: ValidationConfig = ValidationC
     * bucket — an equality/isin filter can never select them, so without
     * the sentinel they would be silently skipped by every per-partition
     * path. Inside that bucket the fused reconciliation counts are
-    * NULL-EXEMPT ([[keysNonNull]], mirroring the modular
+    * NULL-EXEMPT (see [[catalog]], mirroring the modular
     * [[graft.checks.Reconcile.check]]): a null-keyed CANDIDATE row is not
-    * counted as __extra — it is flagged by the part_id_not_null /
+    * counted as extra — it is flagged by the part_id_not_null /
     * clip_id_not_null predicate checks instead, which is what makes the
     * bucket fail (FusedResumableSpec pins clips_exclusivity == 0 there).
     * Deliberate consequence, accepted: a null-keyed REFERENCE row is
@@ -546,12 +463,13 @@ class ValidationSession(spark: SparkSession, cfg: ValidationConfig = ValidationC
       rowsTotal.map(r => ",\"rows_total\":" + r).getOrElse("") + "}"
 
   /** Scale path for resumable validation: ALL pending partitions validated
-    * in ONE grouped fused pass — the mega-aggregate of [[runFused]] grouped
-    * by part_id (plus a grouped key-only uniqueness aggregate), yielding one
-    * verdict row per partition from three concurrent Spark jobs total,
-    * however many partitions are pending. Per-partition drift uses each
-    * partition's own histogram pair, grouped by part_id in the drift job.
-    * Checkpoint rows are written in one bulk commit.
+    * in ONE [[fusedPass]] grouped by part_id, yielding one verdict per
+    * partition from three concurrent Spark jobs total, however many
+    * partitions are pending — the same checks, outcomes and order as
+    * [[runFused]] on each partition alone, reported as one `fused_grouped`
+    * suite timed by the whole pass. Per-partition drift uses each
+    * partition's own histogram pair. Checkpoint rows are written in one
+    * bulk commit.
     *
     * This is what a restarted 10^12-row spark-submit actually needs: the
     * per-partition loop of [[runResumable]] costs a driver-serialized job
@@ -559,80 +477,28 @@ class ValidationSession(spark: SparkSession, cfg: ValidationConfig = ValidationC
     */
   def runResumableFused(clips: DataFrame, dimCodec: DataFrame, store: CheckpointStore,
                         clipsRef: DataFrame): Map[String, ValidationReport] = {
-    import org.apache.spark.sql.Row
-    import spark.implicits._
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
-
     val allParts = partitionUniverse(clips, Some(clipsRef))
     val todo = store.pending(allParts, cfg.ruleVersion)
     if (todo.isEmpty) return Map.empty
     store.markProcessing(todo, cfg.ruleVersion)
     val pendSet = todo.toSet
-    val cand = clips.filter(partsFilter(todo))
-    val ref = clipsRef.filter(partsFilter(todo))
-
-    val codecSet = codecSetOf(dimCodec)
-    val preds = effectiveChecks(cand)
-    val structural = structuralOutcomes(cand)
 
     val t0 = System.nanoTime()
-    // job A: the grouped mega-join aggregate (same shape as runFused's)
-    val fA = Future {
-      val aggs = fusedCountAggs(preds, codecSet)
-      fusedJoin(cand, ref)
-        .groupBy(col("part_id"))
-        .agg(aggs.head, aggs.tail: _*)
-        .collect()
-    }
-
-    // job B: grouped key-only uniqueness (config-disableable)
-    val fB =
-      if (on("clip_id_uniqueness")) Some(Future {
-        cand.select("part_id", "clip_id").filter(col("clip_id").isNotNull)
-          .groupBy(col("part_id"), col("clip_id")).agg(count(lit(1)).as("__c"))
-          .groupBy(col("part_id"))
-          .agg(sum(when(col("__c") > 1, 1L).otherwise(0L)).as("dups"))
-          .collect().map(r => labelOf(r.getString(0)) -> r.getLong(1)).toMap
-      })
-      else None
-
-    // job C: per-partition drift histograms
-    val fC =
-      if (driftOn) Some(Future(Drift.histogramPairs(ref, cand, Seq("part_id"), cfg.driftColumn,
-        cfg.driftLo, cfg.driftHi, cfg.driftBins).map {
-        case (key, hists) => labelOf(key.head.asInstanceOf[String]) -> hists
-      }))
-      else None
-
-    val (aRows, dupByPart, histsByPart) =
-      try (Await.result(fA, Duration.Inf), fB.map(Await.result(_, Duration.Inf)),
-        fC.map(Await.result(_, Duration.Inf)))
-      finally settle(Seq(fA) ++ fB ++ fC)
+    val groups = fusedPass(clips.filter(partsFilter(todo)), dimCodec,
+      clipsRef.filter(partsFilter(todo)), Seq("part_id"))
     val passMs = (System.nanoTime() - t0) / 1000000L
-
-    val reports = aRows.filter(r => pendSet.contains(labelOf(r.getString(0)))).map { row =>
-      val part = labelOf(row.getString(0))
-      val get = fieldGetter(row)
-      val outcomes = (structural ++ fusedCountOutcomes(preds, get) ++
-        dupByPart.map { byPart =>
-          val dups = byPart.getOrElse(part, 0L)
-          CheckOutcome("clip_id_uniqueness", RuleGroup.DuplicateRecords.toString,
-            Severity.Error.toString,
-            CheckOutcome.status(Severity.Error, dups).toString, dups)
-        }.toSeq).map(overrideSeverity) ++
-        histsByPart.toSeq.flatMap(h => driftOutcomes(h.getOrElse(part, emptyHistograms)))
-      part -> (ValidationReport(Seq(SuiteReport("fused_grouped", outcomes, passMs))),
-        get("__rows"))
-    }.toMap
+    val reports = groups.map { case (key, rows, suites) =>
+      labelOf(key.head.asInstanceOf[String]) ->
+        (ValidationReport(Seq(SuiteReport("fused_grouped", suites.flatMap(_.outcomes), passMs))),
+          rows)
+    }.filter { case (part, _) => pendSet.contains(part) }.toMap
 
     // one bulk checkpoint upsert for every validated partition. The universe
     // is cand ∪ ref, and the full-outer join coalesces the using-columns, so
     // even a partition wholly missing from the candidate gets an aggregate
-    // row (all-__missing) and a FAILED checkpoint — never silently skipped.
-    // Per-partition metrics additionally record the candidate row count
-    // (north-star lineage: partition, rule version, metrics).
+    // row (all rows missing) and a FAILED checkpoint — never silently
+    // skipped. Per-partition metrics additionally record the candidate row
+    // count (north-star lineage: partition, rule version, metrics).
     store.markDoneBulk(reports.toSeq.map { case (p, (rep, rows)) =>
       (p, rep.status == "SUCCESS", metricsJson(rep, rowsTotal = Some(rows)))
     }, cfg.ruleVersion)
@@ -646,4 +512,16 @@ object ValidationSession {
     * them as this pseudo-partition instead of silently skipping them.
     */
   val NullPartLabel = "__null_part__"
+
+  /** One row rule of a session's check catalog: its `violation` is true
+    * for the rows of the fused ref↔cand join that violate it; `suite` is
+    * where the modular `run` reports it.
+    */
+  private final case class CatalogCheck(
+      name: String,
+      suite: String,
+      group: RuleGroup.RuleGroup,
+      severity: Severity.Severity,
+      violation: Column,
+      expected: Option[String] = None)
 }

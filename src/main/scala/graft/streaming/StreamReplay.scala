@@ -68,7 +68,7 @@ object StreamReplay {
     */
   private def replay(spark: SparkSession, events: DataFrame,
                      batches: Int, nSentinels: Int, sentinelStepMs: Long,
-                     outputMode: String = "append")(
+                     outputMode: String = "append", emptyOk: Boolean = false)(
                      plan: DataFrame => DataFrame): (DataFrame, Long) = {
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
@@ -76,6 +76,9 @@ object StreamReplay {
       .select("event_id", "ts", "user_id", "event_type", "value", "props")
       .as[EventRow].collect()
       .sortBy(r => (r.ts.getTime, r.event_id))
+    // `emptyOk` plans emit nothing for no input: their output is the plan
+    // over an empty batch frame, typed like the memory sink's table
+    if (rows.isEmpty && emptyOk) return (plan(Seq.empty[EventRow].toDF()), 0L)
     require(rows.nonEmpty, "replay: empty input")
     val maxTs = rows.last.ts.getTime
     val input = MemoryStream[EventRow]
@@ -336,9 +339,10 @@ object StreamReplay {
     // types are dropped by BOTH join sides' filters before any watermark
     // or stateful node, so they cannot influence watermarks, state or
     // output — collecting and feeding them only inflated every trigger
+    // input with neither event type correlates nothing: an empty frame
     val (table, _) = replay(spark,
       events.filter(col("event_type").isin(leftType, rightType)), batches,
-      nSentinels = 0, sentinelStepMs = 0L) { in =>
+      nSentinels = 0, sentinelStepMs = 0L, emptyOk = true) { in =>
       StreamingValidation.streamStreamCorrelate(
         in.filter(col("event_type") === leftType),
         in.filter(col("event_type") === rightType),

@@ -443,6 +443,14 @@ class StreamingSpec extends SparkSpec {
     assert(want.nonEmpty, "fixture must contain real correlations")
   }
 
+  test("replay correlate of input with neither event type: empty, typed frame") {
+    val got = graft.streaming.StreamReplay
+      .eventsCorrelate(spark, events, "__no_such_type", "__nor_this")
+    assert(got.columns.toSeq === Seq("user_id", "left_id", "l_ts", "right_id", "r_ts"))
+    assert(got.schema("l_ts").dataType === org.apache.spark.sql.types.TimestampType)
+    assert(got.collect().isEmpty)
+  }
+
   test("replay session windows == batch gaps-and-islands on real events") {
     import org.apache.spark.sql.expressions.Window
     val got = graft.streaming.StreamReplay
