@@ -11,9 +11,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *
   *   sbt "runMain graft.BenchExtra time <n> [q1,q2,...]"
   *     — run each named query `n` times through the noop sink (same
-  *       evaluation the frozen Bench uses) and print per-attempt wall
-  *       seconds + process CPU-seconds, min last. Session config matches
-  *       Bench.session exactly so timings are comparable.
+  *       evaluation the frozen Bench uses) and print the min wall seconds
+  *       and process CPU-seconds over the attempts that succeeded (FAILED
+  *       when none did), the failed count, then every attempt's wall
+  *       (failed ones marked `!`). Session config matches Bench.session
+  *       exactly so timings are comparable.
   */
 object BenchExtra {
 
@@ -71,19 +73,21 @@ object BenchExtra {
         val n = args.lift(1).map(_.toInt).getOrElse(2)
         for ((name, fn) <- named(args.lift(2))) {
           spark.sparkContext.setJobDescription(name)
-          val samples = (1 to n).map { _ =>
+          // (wall s, cpu s, succeeded): a failed attempt is no sample
+          val attempts = (1 to n).map { _ =>
             val c0 = selfCpuSec(); val t0 = System.nanoTime()
-            try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+            val ok = try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); true }
             catch { case e: Throwable =>
-              System.err.println(s"[time] $name FAILED: ${e.getMessage}")
+              System.err.println(s"[time] $name FAILED: ${e.getMessage}"); false
             }
-            val wall = (System.nanoTime() - t0) / 1e9
-            (wall, selfCpuSec() - c0)
+            ((System.nanoTime() - t0) / 1e9, selfCpuSec() - c0, ok)
           }
           spark.sparkContext.setJobDescription(null)
-          val best = samples.minBy(_._1)
-          println(f"[time] $name%-28s min=${best._1}%6.2fs cpu=${best._2}%6.1fs  " +
-            samples.map(s => f"${s._1}%.2f").mkString("[", ",", "]"))
+          val failed = attempts.count(!_._3)
+          val walls = attempts.map(a => f"${a._1}%.2f" + (if (a._3) "" else "!")).mkString("[", ",", "]")
+          val best = attempts.filter(_._3).minByOption(_._1)
+            .fold("FAILED")(b => f"min=${b._1}%6.2fs cpu=${b._2}%6.1fs")
+          println(f"[time] $name%-28s $best failed=$failed  $walls")
         }
       case "probestream" =>
         // phase-level timing of one stateful replay (windowed drift shape)

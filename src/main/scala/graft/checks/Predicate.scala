@@ -67,18 +67,20 @@ object CheckCompiler {
 
   /** The shared evidence shape behind [[allViolations]] and the fused
     * whole-engine evidence pass: raw tag columns (each `when(cond,
-    * lit(name))`) compacted into one array per row, empty rows dropped,
-    * exploded to (keys..., check_name). Tags may reference join-derived
-    * columns, so this takes Columns, not [[Check]]s.
+    * lit(name))`) compacted into one array per row and exploded to
+    * (keys..., check_name), rows without a violation dropped. Tags may
+    * reference join-derived columns, so this takes Columns, not [[Check]]s.
+    *
+    * The array is built once per row: an inner `explode` lets the optimizer
+    * infer a `size(array) > 0` filter below the projection, which evaluates
+    * every tag (a `pcm_snr` decode among them) twice. `explode_outer` gives
+    * an empty array one NULL row instead, and the compacted array has no
+    * NULL element, so dropping NULL names drops exactly the clean rows.
     */
   def violationsFromTags(df: DataFrame, tags: Seq[Column],
-                         keyCols: Seq[String]): DataFrame = {
-    val arr = array_compact(array(tags: _*)).as("violated")
-    df.select(keyCols.map(col) :+ arr: _*)
-      .filter(size(col("violated")) > 0)
-      .withColumn("check_name", explode(col("violated")))
-      .drop("violated")
-  }
+                         keyCols: Seq[String]): DataFrame =
+    df.select(keyCols.map(col) :+ explode_outer(array_compact(array(tags: _*))).as("check_name"): _*)
+      .filter(col("check_name").isNotNull)
 }
 
 /** The default audio-table rule set — the semantic transfer of the

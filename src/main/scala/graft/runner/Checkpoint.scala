@@ -1,5 +1,7 @@
 package graft.runner
 
+import java.nio.file.{Files, FileAlreadyExistsException, NoSuchFileException, StandardOpenOption}
+import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path, RawLocalFileSystem}
 import org.apache.spark.sql.{Dataset, SparkSession}
 import graft.model.Checkpoint
@@ -81,7 +83,10 @@ class CheckpointStore(spark: SparkSession, path: String) {
           .foreach(s => fs.delete(s.getPath, false)) // crashed writers' temp files
         val id = java.util.UUID.randomUUID().toString
         val tmp = new Path(logDir, s".tmp-$id")
-        val out = fs.create(tmp, false)
+        val out = fs match {
+          case local: RawLocalFileSystem => LocalFiles.create(local.pathToFile(tmp).toPath)
+          case other => other.create(tmp, false)
+        }
         try {
           out.write((mapper.writeValueAsString(Header((base.commits :+ id).takeRight(CommitWindow))) + "\n")
             .getBytes("UTF-8"))
@@ -122,17 +127,11 @@ class CheckpointStore(spark: SparkSession, path: String) {
   /** Atomic create-if-absent of `target`; false when another writer
     * published it first (or swept this writer's stalled temp file).
     */
-  private def publish(tmp: Path, target: Path): Boolean =
-    try fs match {
-      case local: RawLocalFileSystem =>
-        try {
-          java.nio.file.Files.createLink(local.pathToFile(target).toPath, local.pathToFile(tmp).toPath)
-          true
-        } catch {
-          case _: java.nio.file.FileAlreadyExistsException | _: java.nio.file.NoSuchFileException => false
-        }
-      case other => other.rename(tmp, target)
-    } finally fs.delete(tmp, false)
+  private def publish(tmp: Path, target: Path): Boolean = fs match {
+    case local: RawLocalFileSystem =>
+      LocalFiles.publish(local.pathToFile(tmp).toPath, local.pathToFile(target).toPath)
+    case other => try other.rename(tmp, target) finally other.delete(tmp, false)
+  }
 
   /** The whole table as a local relation: collecting it runs no Spark job. */
   def readAll(): Dataset[Checkpoint] = spark.createDataset(latest().table.values.toSeq.sortBy(_.part_id))
@@ -193,4 +192,42 @@ object CheckpointStore {
     .registerModule(com.fasterxml.jackson.module.scala.DefaultScalaModule)
   private def toJson(c: Checkpoint): String = mapper.writeValueAsString(c)
   private def fromJson(line: String): Checkpoint = mapper.readValue(line, classOf[Checkpoint])
+}
+
+/** Engine-owned local files go through `java.nio`, never through Hadoop's
+  * local file system: on a host without `libhadoop`, `RawLocalFileSystem`
+  * forks a `chmod` process on every file create and mkdir, and a
+  * `readlink` process on every link-status lookup (about 3 ms each).
+  */
+private[graft] object LocalFiles {
+
+  /** Hadoop's raw local file system when `p`'s scheme is `file:` (a path
+    * without a scheme takes the default file system's).
+    */
+  def rawLocal(p: Path, conf: Configuration): Option[RawLocalFileSystem] =
+    Option(p.toUri.getScheme).getOrElse(FileSystem.getDefaultUri(conf).getScheme) match {
+      case "file" => Some(FileSystem.getLocal(conf).getRawFileSystem.asInstanceOf[RawLocalFileSystem])
+      case _ => None
+    }
+
+  /** A new, buffered file at `p`; its directory is created when absent. */
+  def create(p: java.nio.file.Path): java.io.OutputStream = {
+    Files.createDirectories(p.getParent)
+    new java.io.BufferedOutputStream(Files.newOutputStream(p, StandardOpenOption.CREATE_NEW))
+  }
+
+  /** Publishes `tmp` as `target` by hard link: an atomic create-if-absent.
+    * False when `target` already exists (it is left intact) or `tmp` is
+    * gone. `tmp` is removed either way.
+    */
+  def publish(tmp: java.nio.file.Path, target: java.nio.file.Path): Boolean =
+    try { Files.createLink(target, tmp); true }
+    catch { case _: FileAlreadyExistsException | _: NoSuchFileException => false }
+    finally { Files.deleteIfExists(tmp); () }
+
+  /** Removes `f` and, for a directory, everything under it. */
+  def deleteTree(f: java.io.File): Unit = {
+    Option(f.listFiles()).foreach(_.foreach(deleteTree))
+    f.delete(); ()
+  }
 }

@@ -3,6 +3,8 @@ package graft.runner
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.hadoop.ParquetWriter
 import org.apache.parquet.hadoop.metadata.CompressionCodecName
+import org.apache.parquet.hadoop.util.HadoopOutputFile
+import org.apache.parquet.io.{LocalOutputFile, OutputFile}
 import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.encoders.{AgnosticEncoder, ExpressionEncoder}
@@ -21,10 +23,11 @@ import graft.model.CheckOutcome
   *
   * Rows are tiny (O(checks), never O(data rows)), so each append is one
   * parquet file written on the driver — no Spark job — under a hidden temp
-  * name and renamed into the table directory: appends are atomic at the
-  * file level. The footer carries Spark's row schema, so readers resolve
-  * the same schema as for files Spark wrote itself, and directories that
-  * mix both read as one table. Every row carries (run_id, part_id) so
+  * name and then published under its final name (a hard link on the local
+  * file system, a rename elsewhere): appends are atomic at the file level.
+  * The footer carries Spark's row schema, so readers resolve the same
+  * schema as for files Spark wrote itself, and directories that mix both
+  * read as one table. Every row carries (run_id, part_id) so
   * downstream reads partition-prune.
   */
 final case class ValidationRunRow(
@@ -84,15 +87,24 @@ class ResultStore(spark: SparkSession, baseDir: String) {
       Seq(SQLConf.PARQUET_WRITE_LEGACY_FORMAT, SQLConf.PARQUET_OUTPUT_TIMESTAMP_TYPE,
         SQLConf.PARQUET_FIELD_ID_WRITE_ENABLED, SQLConf.PARQUET_ANNOTATE_VARIANT_LOGICAL_TYPE)
         .foreach(e => conf.set(e.key, sqlConf.getConfString(e.key)))
-      val writer = new ResultStore.RowWriterBuilder(tmp).withConf(conf)
+      // a `file:` table is written and published through java.nio (see LocalFiles)
+      val local = LocalFiles.rawLocal(dir, conf)
+      val out = local.fold[OutputFile](HadoopOutputFile.fromPath(tmp, conf)) { fs =>
+        java.nio.file.Files.createDirectories(fs.pathToFile(dir).toPath)
+        new LocalOutputFile(fs.pathToFile(tmp).toPath)
+      }
+      val writer = new ResultStore.RowWriterBuilder(out).withConf(conf)
         .withCompressionCodec(CompressionCodecName.SNAPPY).build()
       try rows.foreach(r => writer.write(toRow(r)))
       finally writer.close()
-      val fs = dir.getFileSystem(conf)
-      if (!fs.rename(tmp, new Path(dir, name))) {
-        fs.delete(tmp, false)
-        throw new java.io.IOException(s"result append: rename into $dir failed")
+      val target = new Path(dir, name)
+      val published = local match {
+        case Some(fs) => LocalFiles.publish(fs.pathToFile(tmp).toPath, fs.pathToFile(target).toPath)
+        case None =>
+          val fs = dir.getFileSystem(conf)
+          fs.rename(tmp, target) || { fs.delete(tmp, false); false }
       }
+      if (!published) throw new java.io.IOException(s"result append: publish into $dir failed")
     }
 
   def writeReport(runId: String, partId: String, report: ValidationReport,
@@ -241,8 +253,8 @@ object ResultStore {
   /** parquet-hadoop writer over Spark's own row write support, which puts
     * the `org.apache.spark.sql.parquet.row.metadata` schema in the footer.
     */
-  private final class RowWriterBuilder(p: Path)
-      extends ParquetWriter.Builder[InternalRow, RowWriterBuilder](p) {
+  private final class RowWriterBuilder(file: OutputFile)
+      extends ParquetWriter.Builder[InternalRow, RowWriterBuilder](file) {
     override def self(): RowWriterBuilder = this
     override def getWriteSupport(conf: org.apache.hadoop.conf.Configuration) =
       new ParquetWriteSupport()

@@ -84,11 +84,10 @@ object StreamReplay {
     val input = MemoryStream[EventRow]
     val sink = s"__stream_replay_${sinkCounter.incrementAndGet()}"
     // State is tiny here, but the state STORE instantiates per shuffle
-    // partition per micro-batch (commit + snapshot files each) — pin the
-    // streaming shuffle to a handful of partitions for the query's
-    // duration (4: measured best — 1 serializes the mapGroups batch work,
-    // 2 slows the windowed aggs). A production stream with real state
-    // volume keeps the session default.
+    // partition per micro-batch — pin the streaming shuffle to a handful of
+    // partitions for the query's duration (4: measured best — 1 serializes
+    // the mapGroups batch work, 2 slows the windowed aggs). A production
+    // stream with real state volume keeps the session default.
     val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
     // No-data micro-batches (on by default) run a FULL extra trigger —
     // state-store scan + commit + offset/commit-log writes — after every
@@ -100,19 +99,23 @@ object StreamReplay {
     // at sf0.1: the stateful replays drop ~35-45% wall with identical
     // output (oracle-verified).
     val prevNoData = spark.conf.get("spark.sql.streaming.noDataMicroBatches.enabled")
+    // Every trigger writes an offset-log entry, a delta (plus checksum) per
+    // state store and a commit-log entry. Through Hadoop's local file
+    // system each file forks `chmod` and each rename `readlink` twice on a
+    // host without libhadoop: ~30 ms per log write and ~80 ms per state
+    // store commit, 640 processes for a six-trigger replay. The replay's
+    // throwaway checkpoint goes through java.nio instead; the conf has no
+    // default, so an absent value is unset again afterwards.
+    val managerKey = "spark.sql.streaming.checkpointFileManagerClass"
+    val prevManager = spark.conf.getOption(managerKey)
     spark.conf.set("spark.sql.shuffle.partitions", "4")
     spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-    // The replay checkpoint (offset/commit logs + state deltas, written and
-    // fsynced EVERY trigger) is throwaway by construction — the query dies
-    // with the harness. Keep it on tmpfs when available instead of the
-    // disk-backed default temp dir (~60 ms of log I/O per trigger on ext4);
-    // a production stream keeps a durable checkpointLocation.
-    val ckptBase = {
-      val shm = new java.io.File("/dev/shm")
-      if (shm.isDirectory && shm.canWrite) shm.toPath
-      else java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"))
-    }
-    val ckptDir = java.nio.file.Files.createTempDirectory(ckptBase, "graft-replay-ckpt")
+    spark.conf.set(managerKey, classOf[LocalCheckpointFiles].getName)
+    // The replay checkpoint is throwaway by construction — the query dies
+    // with the harness; a production stream keeps a durable
+    // checkpointLocation. Written through java.nio, it costs the same in
+    // the temp dir as on tmpfs.
+    val ckptDir = java.nio.file.Files.createTempDirectory("graft-replay-ckpt")
     // start() inside the try: a plan that fails analysis must still restore
     // the pinned confs and remove the checkpoint dir
     var q: org.apache.spark.sql.streaming.StreamingQuery = null
@@ -133,12 +136,10 @@ object StreamReplay {
       if (q != null) q.stop()
       spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
       spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", prevNoData)
+      prevManager.fold(spark.conf.unset(managerKey))(spark.conf.set(managerKey, _))
       // explicit checkpointLocation → explicit cleanup (Spark only
       // auto-deletes the temp checkpoints it created itself)
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-      }
-      rm(ckptDir.toFile)
+      graft.runner.LocalFiles.deleteTree(ckptDir.toFile)
     }
     // the memory sink's temp view outlives the stopped query
     (spark.table(sink), maxTs)

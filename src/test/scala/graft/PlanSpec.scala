@@ -125,4 +125,12 @@ class PlanSpec extends SparkSpec {
     val after = spark.sparkContext.statusTracker.getJobIdsForGroup(null).length
     assert(after - before <= 2, s"expected a single-pass agg, saw ${after - before} jobs")
   }
+
+  test("fused evidence pass decodes PCM once per joined row") {
+    val ref = Synth.clipsRef(spark, 2, 50, maxAudioMs = 300).toDF()
+    val dim = Synth.dimCodec(spark).toDF()
+    val ev = new graft.runner.ValidationSession(spark).fusedViolations(ref, dim, ref)
+    val optimized = ev.queryExecution.optimizedPlan.toString
+    assert("pcm_snr\\(".r.findAllIn(optimized).size == 1, s"expected one pcm_snr call in:\n$optimized")
+  }
 }

@@ -57,4 +57,31 @@ abstract class SparkSpec extends AnyFunSuite {
       sentinel("close"); drainUntil("close")
     } finally sc.removeSparkListener(listener)
   }
+
+  /** OS processes this JVM started while `body` ran, from a JFR recording
+    * of `jdk.ProcessStart` events. Two kinds run on their own schedule and
+    * are not counted: Spark's executor heartbeat runs `getconf PAGESIZE`
+    * once per JVM whenever it first fires (that one-off runs before the
+    * recording starts), and a `Cleaner` action removes a garbage-collected
+    * session's artifact directory with `rm -rf` whenever GC gets to it.
+    */
+  protected def processStartsDuring(body: => Unit): Int = {
+    import scala.jdk.CollectionConverters._
+    Class.forName("org.apache.spark.executor.ProcfsMetricsGetter$")
+    val rec = new jdk.jfr.Recording()
+    rec.enable("jdk.ProcessStart").withStackTrace()
+    val dump = java.nio.file.Files.createTempFile("graft-procs", ".jfr")
+    try {
+      rec.start()
+      try body finally rec.stop()
+      rec.dump(dump)
+      def byCleaner(e: jdk.jfr.consumer.RecordedEvent) = Option(e.getStackTrace).exists(
+        _.getFrames.asScala.exists(_.getMethod.getType.getName == "jdk.internal.ref.CleanerImpl"))
+      jdk.jfr.consumer.RecordingFile.readAllEvents(dump).asScala
+        .count(e => e.getEventType.getName == "jdk.ProcessStart" && !byCleaner(e))
+    } finally {
+      rec.close()
+      java.nio.file.Files.deleteIfExists(dump)
+    }
+  }
 }
