@@ -259,18 +259,14 @@ object SparkEntry {
     // aggregation buffer like SQL `percentile` would (oracle = quantile_cont)
     "q_quantiles" -> ((s, dir) => {
       import s.implicits._
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.ExecutionContext.Implicits.global
-      import scala.concurrent.duration.Duration
       def r4(x: Double): Double =
         BigDecimal(x).setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble
       // two independent rank-select computations — overlap their jobs
       // (Mart.runChecks pattern) instead of serializing the two tables
-      val medianF = Future(
-        ExactQuantiles.quantiles(t(s, dir, "orders"), "o_totalprice", Seq(0.5)).head)
-      val qty = ExactQuantiles.quantiles(t(s, dir, "lineitem"), "l_quantity",
-        Seq(0.25, 0.5, 0.75, 0.95))
-      val median = Await.result(medianF, Duration.Inf)
+      val (median, qty) = graft.Settle(
+        ExactQuantiles.quantiles(t(s, dir, "orders"), "o_totalprice", Seq(0.5)).head,
+        ExactQuantiles.quantiles(t(s, dir, "lineitem"), "l_quantity",
+          Seq(0.25, 0.5, 0.75, 0.95)))
       Seq((r4(median), r4(qty(0)), r4(qty(1)), r4(qty(2)), r4(qty(3))))
         .toDF("price_median", "qty_p25", "qty_p50", "qty_p75", "qty_p95")
     }),
@@ -687,18 +683,15 @@ object SparkEntry {
     // through the clustered index machinery — the audit twin of the
     // partition-pruned nprobe<k serving path (unit-tested for recall)
     "q_ann_ivf" -> ((s, dir) => {
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.ExecutionContext.Implicits.global
-      import scala.concurrent.duration.Duration
       val emb = t(s, dir, "embeddings")
+      val base = emb.filter(col("vec_id") =!= 0)
       // the query-vector fetch and the k-means training are independent
       // driver actions — overlap them (Mart.runChecks' concurrent-jobs
       // pattern) instead of serializing two tiny jobs
-      val qF = Future(emb.filter(col("vec_id") === 0).select(col("embedding"))
-        .head().getSeq[Float](0).toSeq)
-      val base = emb.filter(col("vec_id") =!= 0)
-      val model = graft.ops.Ivf.train(base, "vec_id", "embedding", k = 8, iters = 1)
-      val q = Await.result(qF, Duration.Inf)
+      val (q, model) = graft.Settle(
+        emb.filter(col("vec_id") === 0).select(col("embedding"))
+          .head().getSeq[Float](0).toSeq,
+        graft.ops.Ivf.train(base, "vec_id", "embedding", k = 8, iters = 1))
       graft.ops.Ivf.topK(graft.ops.Ivf.assign(base, "embedding", model),
           "vec_id", "embedding", q, model, k = 10, nprobe = 8)
         .withColumn("cosine", round(col("cosine"), 4))

@@ -98,10 +98,6 @@ object Pcm {
     else 10.0 * math.log10(sig / noise)
   }
 
-  /** The row invariant: decoded-PCM allclose at >= 30 dB SNR. */
-  def pcmAllClose(ref: Array[Byte], cand: Array[Byte], minSnrDb: Double = 30.0): Boolean =
-    snrDbBytes(ref, cand) >= minSnrDb
-
   /** |sample| at-or-above this counts as clipped (int16 full scale is
     * -32768..32767; a recording driven into the rail saturates at ±FS).
     */

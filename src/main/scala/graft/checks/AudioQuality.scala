@@ -106,48 +106,6 @@ object AudioQuality {
           "of total energy"))
   }
 
-  /** Transcript↔audio consistency checks — the clip+transcript PAIRING
-    * validation that per-column predicates miss: a transcript can be
-    * present, well-typed, and equal to the reference while still being
-    * the WRONG transcript for its duration (truncated upload, padding
-    * bug, swapped join key upstream). Speaking rate bounds catch both
-    * directions — a transcript far too long for its audio (> maxCharsPerSec)
-    * or suspiciously sparse (< minCharsPerSec) — and the presence check
-    * flags speech-length clips whose transcript is EMPTY (not null:
-    * `transcript_not_null` owns nulls).
-    *
-    * Defaults are deliberately wide (real speech sits at ~12–18 chars/sec;
-    * the bounds only flag physically implausible pairings, not accents or
-    * silence padding). Ordinary predicate checks: they ride every engine
-    * path (modular, fused, grouped resumable, violation tags, config
-    * enable/severity) like [[standaloneChecks]].
-    */
-  def transcriptChecks(minCharsPerSec: Double = 1.0,
-                       maxCharsPerSec: Double = 500.0,
-                       minDurForTranscriptMs: Int = 150,
-                       durCol: String = "dur_ms",
-                       transcriptCol: String = "transcript"): Seq[Check] = {
-    // TRIMMED chars * 1000 / dur_ms (one multiply + one divide): the rate
-    // must see the same character count as the presence guard, or
-    // whitespace padding — the most common pairing artifact — both
-    // inflates the rate and masks a genuinely too-sparse transcript
-    // against the lower bound
-    val cps = length(trim(col(transcriptCol))).cast("double") * lit(1000.0) /
-      col(durCol).cast("double")
-    Seq(
-      Check("transcript_rate_plausible", RuleGroup.OutOfRange, Severity.Warning,
-        col(transcriptCol).isNotNull && length(trim(col(transcriptCol))) > 0 &&
-          col(durCol).isNotNull && col(durCol) > 0 &&
-          (cps < minCharsPerSec || cps > maxCharsPerSec),
-        s"speaking rate must stay in [$minCharsPerSec, $maxCharsPerSec] " +
-          "chars/sec — outside is a wrong-pairing / truncation signal"),
-      Check("transcript_nonempty_for_speech", RuleGroup.MissingValues, Severity.Warning,
-        col(durCol).isNotNull && col(durCol) >= minDurForTranscriptMs &&
-          col(transcriptCol).isNotNull && length(trim(col(transcriptCol))) === 0,
-        s"clips >= ${minDurForTranscriptMs}ms must carry a non-empty " +
-          "transcript (empty-string uploads bypass the null check)"))
-  }
-
   /** Near-duplicate AUDIO CONTENT pairs by energy-envelope fingerprint
     * ([[graft.audio.Pcm.energyFingerprint64]]): all (id_a < id_b) pairs
     * within `maxHamming` bits. Catches re-encoded / noise-dithered copies

@@ -1,7 +1,7 @@
 package graft.checks
 
-import org.apache.spark.sql.{DataFrame, Encoder, Encoders}
-import org.apache.spark.sql.expressions.Aggregator
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.model._
 
@@ -9,12 +9,11 @@ import graft.model._
   * generalizes the reference's golden-snapshot diffing, `report.py:538-662`,
   * to distributions).
   *
-  * A fixed-bin histogram is computed per side with a custom mergeable
-  * `Aggregator` (map-side partial merge == treeAggregate semantics: each
-  * task folds rows into a small Array[Long], partials merge pairwise, one
-  * tiny struct reaches the driver). KS and PSI statistics are then pure
-  * driver math on the two merged histograms — O(bins), independent of row
-  * count.
+  * Every binned statistic derives from one aggregate, [[binCounts]]: per
+  * key and fixed-grid bin, the reference and candidate counts of a numeric
+  * column over the tagged union of both sides. KS, PSI and EMD are then
+  * either driver math on the collected histograms — O(bins), independent
+  * of row count — or per-bin rows an oracle can recompute exactly.
   */
 object Drift {
 
@@ -34,73 +33,97 @@ object Drift {
     }
   }
 
-  /** Mergeable fixed-bin histogram Aggregator. Values outside [lo,hi) clamp
-    * to the edge bins; nulls are skipped by the caller's projection.
-    */
-  class HistogramAgg(lo: Double, hi: Double, bins: Int)
-      extends Aggregator[Double, Array[Long], Histogram] {
-    require(bins > 1 && hi > lo)
-    private val width = (hi - lo) / bins
-    override def zero: Array[Long] = new Array[Long](bins)
-    override def reduce(b: Array[Long], x: Double): Array[Long] = {
-      if (x.isNaN) return b // NaN belongs to no bin (matches na.drop upstream)
-      val i = math.min(bins - 1, math.max(0, ((x - lo) / width).toInt))
-      b(i) += 1L
-      b
-    }
-    override def merge(a: Array[Long], b: Array[Long]): Array[Long] = {
-      var i = 0
-      while (i < a.length) { a(i) += b(i); i += 1 }
-      a
-    }
-    override def finish(b: Array[Long]): Histogram = Histogram(lo, hi, b)
-    override def bufferEncoder: Encoder[Array[Long]] =
-      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Array[Long]]()
-    override def outputEncoder: Encoder[Histogram] = Encoders.product[Histogram]
-  }
-
-  /** Distributed histogram of a numeric column via the Aggregator. */
-  def histogram(df: DataFrame, column: String, lo: Double, hi: Double,
-                bins: Int = 64): Histogram = {
-    import df.sparkSession.implicits._
-    val agg = new HistogramAgg(lo, hi, bins).toColumn
-    df.select(col(column).cast("double")).na.drop()
-      .as[Double].select(agg.as[Histogram]).head()
-  }
-
   /** The fixed-grid bin of a double column: `floor((v − lo) / width)`
     * clamped to `[0, bins)` — values outside `[lo, hi)` land in the edge
-    * bins, as in [[HistogramAgg]]. The clamp runs before the int cast, so
-    * an infinite or huge value never overflows it.
+    * bins. The clamp runs before the int cast, so an infinite or huge
+    * value never overflows it.
     */
-  def binOf(v: org.apache.spark.sql.Column, lo: Double, hi: Double,
-            bins: Int): org.apache.spark.sql.Column =
+  def binOf(v: Column, lo: Double, hi: Double, bins: Int): Column =
     least(lit(bins - 1L), greatest(lit(0L), floor((v - lit(lo)) / lit((hi - lo) / bins))))
       .cast("int")
 
-  /** Histograms of `column` over both tables in ONE narrow aggregate:
-    * `groupBy([keys,] side, bin).count()` over the union of the two
-    * projections (side 0 = ref, 1 = cand). Null and NaN values belong to
-    * no bin (the na.drop of [[histogram]]). Returns one (ref, cand)
-    * histogram pair per distinct key tuple; a side with no values reads
-    * as all-zero counts.
+  /** Per-key, per-bin counts of `column` over both tables in ONE narrow
+    * aggregate: `groupBy(keys, bin)` over the union of the two projections
+    * tagged by side, with map-side-combined conditional counts. Null and
+    * NaN values belong to no bin. Output: (keys…, bin, cnt_ref, cnt_cand),
+    * one row per (key, bin) that holds a value on either side.
+    */
+  private def binCounts(ref: DataFrame, cand: DataFrame, keys: Seq[String], column: String,
+                        lo: Double, hi: Double, bins: Int): DataFrame = {
+    require(bins > 1 && hi > lo, s"drift grid needs bins > 1 and hi > lo, got [$lo,$hi)x$bins")
+    def side(df: DataFrame, tag: Int) = df
+      .select(keys.map(col) :+ col(column).cast("double").as("__v") :+ lit(tag).as("__side"): _*)
+      .filter(col("__v").isNotNull && !isnan(col("__v")))
+    side(ref, 0).unionByName(side(cand, 1))
+      .groupBy(keys.map(col) :+ binOf(col("__v"), lo, hi, bins).as("bin"): _*)
+      .agg(sum(when(col("__side") === 0, 1L).otherwise(0L)).as("cnt_ref"),
+        sum(when(col("__side") === 1, 1L).otherwise(0L)).as("cnt_cand"))
+  }
+
+  /** [[binCounts]] grouped by a bounded column cast to string (`grp`);
+    * rows whose group is null belong to no group.
+    */
+  private def groupedBinCounts(ref: DataFrame, cand: DataFrame, groupCol: String,
+                               column: String, lo: Double, hi: Double,
+                               bins: Int): DataFrame = {
+    def grouped(df: DataFrame) = df
+      .select(col(groupCol).cast("string").as("grp"), col(column).as("__v"))
+      .filter(col("grp").isNotNull)
+    binCounts(grouped(ref), grouped(cand), Seq("grp"), "__v", lo, hi, bins)
+  }
+
+  /** Bin counts (bin, cnt_ref, cnt_cand) made dense over the whole grid:
+    * a bin no value fell in reads 0 on both sides.
+    */
+  private def denseBins(counts: DataFrame, bins: Int): DataFrame =
+    counts.sparkSession.range(bins).select(col("id").cast("int").as("bin"))
+      .join(counts, Seq("bin"), "left")
+      .na.fill(0L, Seq("cnt_ref", "cnt_cand"))
+
+  /** Per-group running (`__cum_*`) and total (`__t*`) counts over grouped
+    * bin counts: windows partitioned by group, bounded at `bins` rows
+    * each — never a global window.
+    */
+  private def withGroupCdf(counts: DataFrame): DataFrame = {
+    val byGroup = Window.partitionBy(col("grp"))
+    val cumW = byGroup.orderBy(col("bin")).rowsBetween(Window.unboundedPreceding, 0)
+    counts
+      .withColumn("__cum_ref", sum(col("cnt_ref")).over(cumW))
+      .withColumn("__cum_cand", sum(col("cnt_cand")).over(cumW))
+      .withColumn("__tref", sum(col("cnt_ref")).over(byGroup))
+      .withColumn("__tcand", sum(col("cnt_cand")).over(byGroup))
+  }
+
+  /** |CDF_ref − CDF_cand| at a bin, from the running and total counts. */
+  private val cdfGap: Column =
+    abs(col("__cum_ref").cast("double") / greatest(col("__tref").cast("double"), lit(1.0)) -
+      col("__cum_cand").cast("double") / greatest(col("__tcand").cast("double"), lit(1.0)))
+
+  /** Histograms of `column` over both tables from one [[binCounts]] job.
+    * Returns one (ref, cand) histogram pair per distinct key tuple; a side
+    * with no values reads as all-zero counts.
     */
   def histogramPairs(ref: DataFrame, cand: DataFrame, keys: Seq[String], column: String,
                      lo: Double, hi: Double, bins: Int): Map[Seq[Any], (Histogram, Histogram)] = {
-    def side(df: DataFrame, tag: Int) = df
-      .select(keys.map(col) :+ col(column).cast("double").as("__v"): _*)
-      .withColumn("__side", lit(tag))
-    val rows = side(ref, 0).unionByName(side(cand, 1))
-      .filter(col("__v").isNotNull && !isnan(col("__v")))
-      .groupBy(keys.map(col) ++ Seq(col("__side"), binOf(col("__v"), lo, hi, bins).as("bin")): _*)
-      .count().collect()
     val k = keys.size
-    rows.groupBy(r => (0 until k).map(r.get)).map { case (key, rs) =>
-      val counts = Array.fill(2)(new Array[Long](bins))
-      rs.foreach(r => counts(r.getInt(k))(r.getInt(k + 1)) = r.getLong(k + 2))
-      key -> (Histogram(lo, hi, counts(0)), Histogram(lo, hi, counts(1)))
-    }
+    binCounts(ref, cand, keys, column, lo, hi, bins).collect()
+      .groupBy(r => (0 until k).map(r.get)).map { case (key, rs) =>
+        val (refCounts, candCounts) = (new Array[Long](bins), new Array[Long](bins))
+        rs.foreach { r =>
+          refCounts(r.getInt(k)) = r.getLong(k + 1)
+          candCounts(r.getInt(k)) = r.getLong(k + 2)
+        }
+        key -> (Histogram(lo, hi, refCounts), Histogram(lo, hi, candCounts))
+      }
   }
+
+  /** Histogram of one table's numeric column: [[histogramPairs]] against
+    * an empty candidate, which the optimizer drops from the plan.
+    */
+  def histogram(df: DataFrame, column: String, lo: Double, hi: Double,
+                bins: Int = 64): Histogram =
+    histogramPairs(df, df.limit(0), Nil, column, lo, hi, bins)
+      .get(Nil).fold(Histogram(lo, hi, new Array[Long](bins)))(_._1)
 
   /** Histograms must share the SAME grid — equal bin counts over
     * different [lo,hi) ranges would compare incommensurable bins and
@@ -160,11 +183,10 @@ object Drift {
     * hash-matches. Unlike PSI's log terms, the |CDF gap| SUM is itself
     * order-independent in exact arithmetic, but the emitted decomposition
     * keeps the gate conservative (terms compared exactly; the caller sums
-    * in bin order like [[chiSquareCheck]]).
+    * in bin order).
     *
-    * One scan: both sides tagged and unioned, one groupBy(bin) with
-    * map-side-combined conditional counts, bins densified against the
-    * tiny `spark.range(bins)` table. Cumulative counts come from a
+    * Counts come from [[binCounts]], densified against the tiny
+    * `spark.range(bins)` table. Cumulative counts come from a
     * TRIANGULAR BROADCAST JOIN over the dense bin table (bins² pairs of a
     * bounded-by-contract grid — never a global unpartitioned window,
     * which would drag rows through one task if this shape were ever
@@ -176,18 +198,7 @@ object Drift {
     require(bins > 1 && bins <= 4096 && hi > lo,
       "emdTerms: need 1 < bins <= 4096 and hi > lo")
     val width = (hi - lo) / bins
-    def side(df: DataFrame, tag: Int) = df
-      .select(col(column).cast("double").as("__v"), lit(tag).as("__side"))
-      .filter(col("__v").isNotNull && !isnan(col("__v")))
-    val binCol = binOf(col("__v"), lo, hi, bins)
-    val counts = side(expected, 0).unionByName(side(actual, 1))
-      .groupBy(binCol.as("bin"))
-      .agg(sum(when(col("__side") === 0, 1L).otherwise(0L)).as("cnt_ref"),
-        sum(when(col("__side") === 1, 1L).otherwise(0L)).as("cnt_cand"))
-    val spark = expected.sparkSession
-    val allBins = spark.range(bins).select(col("id").cast("int").as("bin"))
-    val dense = allBins.join(counts, Seq("bin"), "left")
-      .na.fill(0L, Seq("cnt_ref", "cnt_cand"))
+    val dense = denseBins(binCounts(expected, actual, Nil, column, lo, hi, bins), bins)
     val cum = dense.as("a")
       .join(broadcast(dense.select(col("bin").as("__b_bin"),
         col("cnt_ref").as("__b_ref"), col("cnt_cand").as("__b_cand"))),
@@ -198,21 +209,15 @@ object Drift {
         sum(col("__b_cand")).as("__cum_cand"))
     val totals = dense.agg(sum(col("cnt_ref")).as("__tref"),
       sum(col("cnt_cand")).as("__tcand"))
-    val cdfRef = col("__cum_ref").cast("double") /
-      greatest(col("__tref").cast("double"), lit(1.0))
-    val cdfCand = col("__cum_cand").cast("double") /
-      greatest(col("__tcand").cast("double"), lit(1.0))
     cum.crossJoin(broadcast(totals))
       .select(col("bin"), col("cnt_ref"), col("cnt_cand"),
-        floor(abs(cdfRef - cdfCand) * lit(width) * lit(1e6)).cast("long")
-          .as("emd_term_1e6"))
+        floor(cdfGap * lit(width) * lit(1e6)).cast("long").as("emd_term_1e6"))
   }
 
   /** PER-GROUP Wasserstein-1 terms — [[emdTerms]] stratified by a bounded
     * grouping column (codec, sr_hz…): one row per (group, bin) with the
     * |CDF gap|·width term as `floor(term·1e6)`, so each group's
-    * shift-distance statistic is the bin-ordered sum of its rows (same
-    * driver-side fold contract as [[emdCheck]]). Closes the drift-family
+    * shift-distance statistic is the bin-ordered sum of its rows. Closes the drift-family
     * matrix: KS has a global and a per-group form, PSI a global and a
     * per-bin-terms form — this is EMD's per-group decomposition.
     *
@@ -221,9 +226,8 @@ object Drift {
     * gap persists across empty bins), so every (group, bin) cell must
     * appear — built as distinct-groups × broadcast `spark.range(bins)`
     * (|groups|·bins rows, payload-free; the grouping column is bounded
-    * by contract, same as [[groupedKsCheck]]). Cumulative and total
-    * counts ride per-group windows over that aggregate — bounded at
-    * `bins` rows per partition, never a global window.
+    * by contract). Cumulative and total counts ride per-group windows
+    * over that aggregate ([[withGroupCdf]]).
     */
   def groupedEmdTerms(ref: DataFrame, cand: DataFrame, groupCol: String,
                       column: String, lo: Double, hi: Double,
@@ -231,36 +235,14 @@ object Drift {
     require(bins > 1 && bins <= 4096 && hi > lo,
       "groupedEmdTerms: need 1 < bins <= 4096 and hi > lo")
     val width = (hi - lo) / bins
-    def side(df: DataFrame, tag: Int) = df
-      .select(col(groupCol).cast("string").as("grp"),
-        col(column).cast("double").as("__v"), lit(tag).as("__side"))
-      .filter(col("__v").isNotNull && !isnan(col("__v")) && col("grp").isNotNull)
-    val binCol = binOf(col("__v"), lo, hi, bins)
-    val counts = side(ref, 0).unionByName(side(cand, 1))
-      .groupBy(col("grp"), binCol.as("bin"))
-      .agg(sum(when(col("__side") === 0, 1L).otherwise(0L)).as("cnt_ref"),
-        sum(when(col("__side") === 1, 1L).otherwise(0L)).as("cnt_cand"))
-    val spark = ref.sparkSession
-    val allBins = spark.range(bins).select(col("id").cast("int").as("bin"))
+    val counts = groupedBinCounts(ref, cand, groupCol, column, lo, hi, bins)
+    val allBins = ref.sparkSession.range(bins).select(col("id").cast("int").as("bin"))
     val dense = counts.select(col("grp")).distinct()
       .crossJoin(broadcast(allBins))
       .join(counts, Seq("grp", "bin"), "left")
       .na.fill(0L, Seq("cnt_ref", "cnt_cand"))
-    val byGroup = org.apache.spark.sql.expressions.Window.partitionBy(col("grp"))
-    val cumW = byGroup.orderBy(col("bin"))
-      .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, 0)
-    val withCdf = dense
-      .withColumn("__cum_ref", sum(col("cnt_ref")).over(cumW))
-      .withColumn("__cum_cand", sum(col("cnt_cand")).over(cumW))
-      .withColumn("__tref", sum(col("cnt_ref")).over(byGroup))
-      .withColumn("__tcand", sum(col("cnt_cand")).over(byGroup))
-    val cdfRef = col("__cum_ref").cast("double") /
-      greatest(col("__tref").cast("double"), lit(1.0))
-    val cdfCand = col("__cum_cand").cast("double") /
-      greatest(col("__tcand").cast("double"), lit(1.0))
-    withCdf.select(col("grp"), col("bin"), col("cnt_ref"), col("cnt_cand"),
-      floor(abs(cdfRef - cdfCand) * lit(width) * lit(1e6)).cast("long")
-        .as("emd_term_1e6"))
+    withGroupCdf(dense).select(col("grp"), col("bin"), col("cnt_ref"), col("cnt_cand"),
+      floor(cdfGap * lit(width) * lit(1e6)).cast("long").as("emd_term_1e6"))
   }
 
   /** PER-GROUP Kolmogorov–Smirnov drift — the "which partitions drifted"
@@ -278,93 +260,21 @@ object Drift {
     * needed. Missing bins need no densification: a bin absent from both
     * sides repeats the previous CDF gap and can never host a new maximum.
     *
-    * Scale shape: ONE scan of each side (tagged union), one shuffle on
-    * (group, bin) with map-side-combined conditional counts — the
-    * aggregated table is |groups|·bins rows, payload-free — then
-    * PER-GROUP windows (partition = group: bounded at `bins` rows each,
-    * never the unpartitioned global window PlanGuardSpec bans) for the
-    * running and total counts, and a final groupBy(group) max. Skewed
-    * groups cost nothing extra: the window runs on the aggregate, not
-    * the raw rows.
+    * Scale shape: the per-(group, bin) [[binCounts]] aggregate —
+    * |groups|·bins rows, payload-free — then PER-GROUP windows
+    * ([[withGroupCdf]]; never the unpartitioned global window
+    * PlanGuardSpec bans) and a final groupBy(group) max. Skewed groups
+    * cost nothing extra: the window runs on the aggregate, not the raw
+    * rows.
     */
   def groupedKs(ref: DataFrame, cand: DataFrame, groupCol: String,
                 column: String, lo: Double, hi: Double,
-                bins: Int): DataFrame = {
-    require(bins > 1 && hi > lo, "groupedKs: need bins > 1 and hi > lo")
-    def side(df: DataFrame, tag: Int) = df
-      .select(col(groupCol).cast("string").as("grp"),
-        col(column).cast("double").as("__v"), lit(tag).as("__side"))
-      .filter(col("__v").isNotNull && !isnan(col("__v")) && col("grp").isNotNull)
-    val binCol = binOf(col("__v"), lo, hi, bins)
-    val counts = side(ref, 0).unionByName(side(cand, 1))
-      .groupBy(col("grp"), binCol.as("bin"))
-      .agg(sum(when(col("__side") === 0, 1L).otherwise(0L)).as("cnt_ref"),
-        sum(when(col("__side") === 1, 1L).otherwise(0L)).as("cnt_cand"))
-    val byGroup = org.apache.spark.sql.expressions.Window.partitionBy(col("grp"))
-    val cumW = byGroup.orderBy(col("bin"))
-      .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, 0)
-    val withCdf = counts
-      .withColumn("__cum_ref", sum(col("cnt_ref")).over(cumW))
-      .withColumn("__cum_cand", sum(col("cnt_cand")).over(cumW))
-      .withColumn("__tref", sum(col("cnt_ref")).over(byGroup))
-      .withColumn("__tcand", sum(col("cnt_cand")).over(byGroup))
-    val gap = abs(col("__cum_ref").cast("double") /
-        greatest(col("__tref").cast("double"), lit(1.0)) -
-      col("__cum_cand").cast("double") /
-        greatest(col("__tcand").cast("double"), lit(1.0)))
-    withCdf.groupBy(col("grp"))
+                bins: Int): DataFrame =
+    withGroupCdf(groupedBinCounts(ref, cand, groupCol, column, lo, hi, bins))
+      .groupBy(col("grp"))
       .agg(sum(col("cnt_ref")).as("n_ref"),
         sum(col("cnt_cand")).as("n_cand"),
-        floor(max(gap) * lit(1e6)).cast("long").as("ks_1e6"))
-  }
-
-  /** Per-group drift verdicts from [[groupedKs]]: one CheckOutcome per
-    * group above the KS threshold (bounded collect: group cardinality,
-    * not row count — and the caller picks grouping columns that are
-    * bounded by construction, codec/sr_hz-style).
-    */
-  def groupedKsCheck(ref: DataFrame, cand: DataFrame, groupCol: String,
-                     column: String, lo: Double, hi: Double, bins: Int = 64,
-                     ksThreshold: Double = 0.1,
-                     maxGroups: Int = 10000): Seq[CheckOutcome] = {
-    val rows = groupedKs(ref, cand, groupCol, column, lo, hi, bins)
-      .orderBy(col("grp")).limit(maxGroups + 1).collect()
-    require(rows.length <= maxGroups,
-      s"groupedKsCheck: more than $maxGroups groups — per-group verdicts " +
-        "need a bounded grouping column (got an unbounded key?)")
-    rows.toSeq.map { r =>
-      val ks = r.getAs[Long]("ks_1e6") / 1e6
-      CheckOutcome(s"${column}_ks_drift[${r.getAs[String]("grp")}]",
-        RuleGroup.DistributionDrift.toString, Severity.Error.toString,
-        (if (ks > ksThreshold) CheckStatus.FAIL else CheckStatus.PASS).toString,
-        rowsFailed = if (ks > ksThreshold) 1L else 0L,
-        observedValue = Some(String.format(java.util.Locale.ROOT, "%.6f",
-          Double.box(ks))),
-        expectedValue = Some(s"<= $ksThreshold"))
-    }
-  }
-
-  /** EMD drift verdict from [[emdTerms]]: collects the per-bin rows (grid
-    * cardinality, not row count), sums the statistic in bin order,
-    * compares against a threshold expressed as a FRACTION of the grid
-    * span (W₁'s raw unit is the column's unit, so `0.05` means "mass
-    * moved 5% of the range on average").
-    */
-  def emdCheck(ref: DataFrame, cand: DataFrame, column: String,
-               lo: Double, hi: Double, bins: Int = 64,
-               maxShiftFraction: Double = 0.05): CheckOutcome = {
-    val rows = emdTerms(ref, cand, column, lo, hi, bins)
-      .orderBy(col("bin")).collect()
-    val stat = rows.map(_.getAs[Long]("emd_term_1e6")).sum / 1e6
-    val threshold = maxShiftFraction * (hi - lo)
-    CheckOutcome(s"${column}_emd_drift", RuleGroup.DistributionDrift.toString,
-      Severity.Warning.toString,
-      (if (stat > threshold) CheckStatus.WARN else CheckStatus.PASS).toString,
-      rowsFailed = if (stat > threshold) 1L else 0L,
-      observedValue = Some(String.format(java.util.Locale.ROOT, "%.6f",
-        Double.box(stat))),
-      expectedValue = Some(s"<= $threshold"))
-  }
+        floor(max(cdfGap) * lit(1e6)).cast("long").as("ks_1e6"))
 
   /** Two-sample chi-square homogeneity test over a CATEGORICAL column —
     * the drift test for codec/sr_hz-style discrete domains where a
@@ -411,23 +321,6 @@ object Drift {
         floor(term * lit(1e6)).cast("long").as("chi_term_1e6"))
   }
 
-  /** Chi-square drift verdict from [[chiSquareCategorical]]: collects the
-    * per-category rows (category cardinality, not row count), sums the
-    * statistic in category order, compares to the given critical value.
-    */
-  def chiSquareCheck(ref: DataFrame, cand: DataFrame, column: String,
-                     critical: Double): CheckOutcome = {
-    val rows = chiSquareCategorical(ref, cand, column)
-      .orderBy(col("category")).collect()
-    val stat = rows.map(_.getAs[Long]("chi_term_1e6")).sum / 1e6
-    CheckOutcome(s"${column}_chisq_drift", RuleGroup.DistributionDrift.toString,
-      Severity.Error.toString,
-      (if (stat > critical) CheckStatus.FAIL else CheckStatus.PASS).toString,
-      rowsFailed = if (stat > critical) 1L else 0L,
-      observedValue = Some(String.format(java.util.Locale.ROOT, "%.6f",
-        Double.box(stat))), expectedValue = Some(s"<= $critical"))
-  }
-
   /** Per-bin PSI terms between two sides of a numeric column on a shared
     * fixed grid — the cross-engine-checkable decomposition of [[psi]].
     *
@@ -444,26 +337,13 @@ object Drift {
     * left-join against `spark.range(bins)`), matching [[psi]] which
     * iterates all bins.
     *
-    * One scan: both sides tagged and unioned, one groupBy(bin) with
-    * map-side-combined conditional counts, bins densified by a broadcast
-    * join against the tiny bin range, totals attached as a broadcast
-    * one-row aggregate — never a global window. Output: (bin, cnt_ref,
-    * cnt_cand, psi_term_1e6).
+    * Counts come from [[binCounts]], densified against the tiny bin
+    * range; totals ride a broadcast one-row aggregate — never a global
+    * window. Output: (bin, cnt_ref, cnt_cand, psi_term_1e6).
     */
   def psiTerms(expected: DataFrame, actual: DataFrame, column: String,
                lo: Double, hi: Double, bins: Int): DataFrame = {
-    require(bins > 1 && hi > lo, "psiTerms: need bins > 1 and hi > lo")
-    def side(df: DataFrame, tag: Int) = df
-      .select(col(column).cast("double").as("__v"), lit(tag).as("__side"))
-      .filter(col("__v").isNotNull && !isnan(col("__v")))
-    val counts = side(expected, 0).unionByName(side(actual, 1))
-      .groupBy(binOf(col("__v"), lo, hi, bins).as("bin"))
-      .agg(sum(when(col("__side") === 0, 1L).otherwise(0L)).as("cnt_ref"),
-        sum(when(col("__side") === 1, 1L).otherwise(0L)).as("cnt_cand"))
-    val spark = expected.sparkSession
-    val allBins = spark.range(bins).select(col("id").cast("int").as("bin"))
-    val dense = allBins.join(counts, Seq("bin"), "left")
-      .na.fill(0L, Seq("cnt_ref", "cnt_cand"))
+    val dense = denseBins(binCounts(expected, actual, Nil, column, lo, hi, bins), bins)
     val totals = dense.agg(sum(col("cnt_ref")).as("__tref"),
       sum(col("cnt_cand")).as("__tcand"))
     val pe = greatest(col("cnt_ref").cast("double") /
@@ -505,14 +385,10 @@ object Drift {
   def check(ref: DataFrame, cand: DataFrame, column: String,
             lo: Double, hi: Double, bins: Int = 64,
             ksThreshold: Double = 0.1, psiThreshold: Double = 0.2): Seq[CheckOutcome] = {
-    // both sides' histogram jobs submitted concurrently (independent scans)
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val fr = Future(histogram(ref, column, lo, hi, bins))
-    val fc = Future(histogram(cand, column, lo, hi, bins))
-    outcomes(Await.result(fr, Duration.Inf), Await.result(fc, Duration.Inf),
-      column, ksThreshold, psiThreshold)
+    val zero = Histogram(lo, hi, new Array[Long](bins))
+    val (refHist, candHist) =
+      histogramPairs(ref, cand, Nil, column, lo, hi, bins).getOrElse(Nil, (zero, zero))
+    outcomes(refHist, candHist, column, ksThreshold, psiThreshold)
   }
 
   /** The KS + PSI verdict pair for two histograms of `column` on the same

@@ -57,15 +57,6 @@ object ColumnStats {
     val fields = df.schema.fields.filter(f =>
       if (columns.nonEmpty) columns.contains(f.name)
       else f.dataType != BinaryType)
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val exactFuture: Option[Future[Map[String, Long]]] =
-      if (!exactDistinct) None
-      else Some(Future.traverse(fields.toSeq)(f => Future {
-        f.name -> df.select(col(f.name)).filter(col(f.name).isNotNull)
-          .distinct().count()
-      }).map(_.toMap))
     // one shared total-row count (count(lit(1)) is identical per column;
     // N copies would waste aggregate buffers in a pass that must stay
     // under codegen field limits)
@@ -89,9 +80,11 @@ object ColumnStats {
              .as(s"${f.name}__q"))
          else Nil)
     }
-    val row = df.agg(aggs.head, aggs.tail: _*).head()
-    val exactByCol: Map[String, Long] =
-      exactFuture.map(Await.result(_, Duration.Inf)).getOrElse(Map.empty)
+    val (row, exactByCol) = graft.Settle(
+      df.agg(aggs.head, aggs.tail: _*).head(),
+      if (!exactDistinct) Map.empty[String, Long]
+      else graft.Settle.all(fields.toSeq.map(f => () =>
+        f.name -> df.select(col(f.name)).filter(col(f.name).isNotNull).distinct().count())).toMap)
     def get[T](n: String): Option[T] = {
       val i = row.fieldIndex(n)
       if (row.isNullAt(i)) None else Some(row.getAs[T](i))

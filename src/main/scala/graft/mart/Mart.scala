@@ -142,13 +142,10 @@ object Mart {
     * L-stage wall time is max(kpi, party) instead of the sum.
     */
   def runChecks(kpi: DataFrame, party: DataFrame): Seq[CheckOutcome] = {
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.ExecutionContext.Implicits.global
-    import scala.concurrent.duration.Duration
-    val fKpi = Future(CheckCompiler.run(kpi, kpiChecks))
-    val fParty = Future(Uniqueness.check(
-      party.select("role", "party_id", "season_year"),
-      Seq("role", "party_id", "season_year"), "mart_duplicate_party_rows"))
-    Await.result(fKpi, Duration.Inf) :+ Await.result(fParty, Duration.Inf)
+    val (kpiOutcomes, partyOutcome) = graft.Settle(
+      CheckCompiler.run(kpi, kpiChecks),
+      Uniqueness.check(party.select("role", "party_id", "season_year"),
+        Seq("role", "party_id", "season_year"), "mart_duplicate_party_rows"))
+    kpiOutcomes :+ partyOutcome
   }
 }

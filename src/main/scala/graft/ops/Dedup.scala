@@ -362,13 +362,6 @@ object Dedup {
       .dropDuplicates("id_a", "id_b")
   }
 
-  /** [[nearDuplicatesSimhashSigs]] projected to (id_a, id_b, hamming). */
-  def nearDuplicatesSimhash(df: DataFrame, idCol: String, textCol: String,
-                            maxHamming: Int = 3,
-                            maxBucket: Int = DefaultMaxBucket): DataFrame =
-    nearDuplicatesSimhashSigs(df, idCol, textCol, maxHamming, maxBucket)
-      .select("id_a", "id_b", "hamming")
-
   /** EXACT set-similarity self-join by PREFIX FILTERING — all pairs with
     * word-k-shingle Jaccard >= threshold at COMPLETE recall with no
     * probabilistic stage (All-Pairs: Bayardo, Ma & Srikant, WWW 2007;
@@ -606,14 +599,6 @@ object Dedup {
       .select(col("id_a").as(idCol)).distinct()
     corpus.join(contaminated, Seq(idCol), "left_anti")
   }
-
-  /** Embedding-cosine near-duplicate pairs — delegates candidate generation
-    * to random-hyperplane LSH in [[Similarity]] and verifies with exact
-    * cosine >= threshold.
-    */
-  def nearDuplicatesEmbedding(df: DataFrame, idCol: String, vecCol: String,
-                              threshold: Double = 0.95, planes: Int = 16): DataFrame =
-    Similarity.cosinePairsLsh(df, idCol, vecCol, threshold, planes)
 
   /** Connected components over an undirected near-dup pair graph
     * (id_a, id_b) — duplicate CLUSTERS from duplicate PAIRS, including the

@@ -126,83 +126,6 @@ object Similarity {
       .limit(k)
   }
 
-  /** Per-table plane matrix for the multi-table construction — table
-    * `tbl`'s planes come from an independent region of the same splitmix64
-    * stream (seed (tbl*1000+p)*7919+d), so tables are deterministic AND
-    * mutually independent.
-    */
-  private def planeMatrix(tbl: Int, planes: Int, dim: Int): Array[Array[Double]] =
-    Array.tabulate(planes, dim) { (p, d) =>
-      val u = (Synth.mix64((tbl * 1000 + p).toLong * 7919L + d) >>> 11).toDouble /
-        (1L << 53).toDouble
-      u * 2.0 - 1.0
-    }
-
-  private def signatureOf(v: Seq[Float], pm: Array[Array[Double]]): Long = {
-    var sig = 0L
-    var p = 0
-    while (p < pm.length) {
-      val plane = pm(p)
-      var s = 0.0
-      var d = 0
-      val n = math.min(v.length, plane.length)
-      while (d < n) { s += v(d).toDouble * plane(d); d += 1 }
-      if (s >= 0) sig |= 1L << p
-      p += 1
-    }
-    sig
-  }
-
-  /** Multi-table (OR-construction) signatures: `tables` independent
-    * hyperplane codes of `planes` bits each, emitted as one
-    * `buckets: array<bigint>` column in a single tight-loop pass. This is
-    * the standard E2LSH recall amplifier: a candidate collides with the
-    * query if ANY table's signature matches, so for per-plane agreement
-    * probability p the recall is 1 − (1 − p^planes)^tables — `planes`
-    * buys precision, `tables` buys recall, independently. At scale each
-    * table is a partition column of its own index copy (or one table with
-    * `buckets[t]` bucketing), making every probe partition-pruned.
-    */
-  def hyperplaneBucketsMulti(df: DataFrame, vecCol: String, tables: Int,
-                             planes: Int, dim: Int): DataFrame = {
-    val pms = Array.tabulate(tables)(t => planeMatrix(t, planes, dim))
-    val bucketsUdf = udf { (v: Seq[Float]) =>
-      if (v == null) Option.empty[Seq[Long]]
-      else Some(pms.toSeq.map(pm => signatureOf(v, pm)))
-    }
-    df.withColumn("buckets", bucketsUdf(col(vecCol)))
-  }
-
-  /** Driver-side query signatures for the same `tables`×`planes` code —
-    * public so a serving layer can route probes to partition-pruned index
-    * copies without touching Spark.
-    */
-  def querySignatures(query: Seq[Float], tables: Int,
-                      planes: Int): Seq[Long] =
-    (0 until tables).map(t =>
-      signatureOf(query, planeMatrix(t, planes, query.length)))
-
-  /** ANN top-k via multi-table LSH: candidates share the query's EXACT
-    * signature in at least one of the `tables` codes (OR-construction),
-    * then exact cosine re-rank. Compared to single-table multi-probe
-    * ([[topKLsh]]), recall amplifies with `tables` without widening any
-    * single probe: candidates(L) grows monotonically in L and
-    * P(miss) = (1 − p^planes)^tables decays geometrically.
-    */
-  def topKLshMulti(df: DataFrame, idCol: String, vecCol: String,
-                   query: Seq[Float], k: Int = 10, tables: Int = 8,
-                   planes: Int = 8): DataFrame = {
-    val qSigs = querySignatures(query, tables, planes)
-    val bucketed = hyperplaneBucketsMulti(df, vecCol, tables, planes, query.length)
-    val matchAny = (0 until tables)
-      .map(t => col("buckets").getItem(t) === qSigs(t)).reduce(_ || _)
-    val q = array(query.map(v => lit(v.toDouble)): _*)
-    bucketed.filter(matchAny)
-      .select(col(idCol), cosine(col(vecCol), q).as("cosine"))
-      .orderBy(col("cosine").desc, col(idCol))
-      .limit(k)
-  }
-
   /** All-pairs near-duplicate search by cosine >= threshold, LSH-bucketed:
     * candidates share a bucket (plus one-bit-off buckets would raise recall;
     * single-bucket keeps the join linear), verified by exact cosine.

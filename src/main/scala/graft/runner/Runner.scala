@@ -277,14 +277,11 @@ class ValidationSession(spark: SparkSession, cfg: ValidationConfig = ValidationC
     * every key on either side), its key values, its candidate row count and
     * the suites `fused_join` (structural schema findings, then the catalog),
     * `uniqueness` and `drift` — the last two when enabled — each timed by
-    * its own job. Every future is settled before this returns or throws.
+    * its own job. The jobs settle together ([[graft.Settle]]).
     */
   private def fusedPass(cand: DataFrame, dimCodec: DataFrame, ref: DataFrame,
                         keys: Seq[String]): Seq[(Seq[Any], Long, Seq[SuiteReport])] = {
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
-    def timed[T](body: => T): Future[(T, Long)] = Future {
+    def timed[T](body: => T): (T, Long) = {
       val t0 = System.nanoTime()
       val out = body
       (out, (System.nanoTime() - t0) / 1000000L)
@@ -296,25 +293,19 @@ class ValidationSession(spark: SparkSession, cfg: ValidationConfig = ValidationC
     val structural = cfg.schemaSpec.toSeq.flatMap(SchemaCheck.structural(cand, _))
     val aggs = sum(when(col("__c").isNotNull, 1L).otherwise(0L)).as("__rows") +:
       checks.map(c => sum(when(c.violation, 1L).otherwise(0L)).as(c.name))
-    val fA = timed(fusedJoin(cand, ref).groupBy(keys.map(col): _*)
-      .agg(aggs.head, aggs.tail: _*).collect())
-    val fB =
-      if (on(UniquenessCheck)) Some(timed(
+    val ((aRows, aMs), b, c) = graft.Settle(
+      timed(fusedJoin(cand, ref).groupBy(keys.map(col): _*)
+        .agg(aggs.head, aggs.tail: _*).collect()),
+      if (!on(UniquenessCheck)) None
+      else Some(timed(
         cand.select((keys :+ "clip_id").map(col): _*).filter(col("clip_id").isNotNull)
           .groupBy((keys :+ "clip_id").map(col): _*).agg(count(lit(1)).as("__n"))
           .groupBy(keys.map(col): _*)
           .agg(sum(when(col("__n") > 1, 1L).otherwise(0L)).as("dups"))
-          .collect()))
-      else None
-    val fC =
-      if (driftOn) Some(timed(Drift.histogramPairs(ref, cand, keys, cfg.driftColumn,
-        cfg.driftLo, cfg.driftHi, cfg.driftBins)))
-      else None
-
-    val ((aRows, aMs), b, c) =
-      try (Await.result(fA, Duration.Inf), fB.map(Await.result(_, Duration.Inf)),
-        fC.map(Await.result(_, Duration.Inf)))
-      finally settle(Seq(fA) ++ fB ++ fC)
+          .collect())),
+      if (!driftOn) None
+      else Some(timed(Drift.histogramPairs(ref, cand, keys, cfg.driftColumn,
+        cfg.driftLo, cfg.driftHi, cfg.driftBins))))
     val dupsByKey = b.map { case (rows, ms) =>
       (rows.map(r => keyOf(r) -> longAt(r, keys.size)).toMap, ms) }
     val zero = Drift.Histogram(cfg.driftLo, cfg.driftHi, new Array[Long](cfg.driftBins))
@@ -340,12 +331,6 @@ class ValidationSession(spark: SparkSession, cfg: ValidationConfig = ValidationC
         Seq(suite("fused_join", joined, aMs)) ++ uniqueness ++ drift)
     }
   }
-
-  /** Waits for every future, failed or not: no job a verdict submitted may
-    * outlive the verdict, even when a sibling job failed first.
-    */
-  private def settle(fs: Seq[scala.concurrent.Future[_]]): Unit =
-    fs.foreach(f => scala.concurrent.Await.ready(f, scala.concurrent.duration.Duration.Inf))
 
   // ==== fused entry points ===================================================
 

@@ -65,10 +65,12 @@ object StreamReplay {
     * through `plan`, then `nSentinels` one-row sentinel batches at
     * `sentinelStepMs` spacing past the real max event time (0 sentinels for
     * stateless/append-immediate operators). Returns the memory-sink table.
+    * Empty input emits nothing: the result is a zero-row frame typed by the
+    * analysed plan, and no query starts.
     */
   private def replay(spark: SparkSession, events: DataFrame,
                      batches: Int, nSentinels: Int, sentinelStepMs: Long,
-                     outputMode: String = "append", emptyOk: Boolean = false)(
+                     outputMode: String = "append")(
                      plan: DataFrame => DataFrame): (DataFrame, Long) = {
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
@@ -76,12 +78,10 @@ object StreamReplay {
       .select("event_id", "ts", "user_id", "event_type", "value", "props")
       .as[EventRow].collect()
       .sortBy(r => (r.ts.getTime, r.event_id))
-    // `emptyOk` plans emit nothing for no input: their output is the plan
-    // over an empty batch frame, typed like the memory sink's table
-    if (rows.isEmpty && emptyOk) return (plan(Seq.empty[EventRow].toDF()), 0L)
-    require(rows.nonEmpty, "replay: empty input")
-    val maxTs = rows.last.ts.getTime
     val input = MemoryStream[EventRow]
+    if (rows.isEmpty) return (spark.createDataFrame(
+      java.util.Collections.emptyList[org.apache.spark.sql.Row](), plan(input.toDF()).schema), 0L)
+    val maxTs = rows.last.ts.getTime
     val sink = s"__stream_replay_${sinkCounter.incrementAndGet()}"
     // State is tiny here, but the state STORE instantiates per shuffle
     // partition per micro-batch — pin the streaming shuffle to a handful of
@@ -340,10 +340,9 @@ object StreamReplay {
     // types are dropped by BOTH join sides' filters before any watermark
     // or stateful node, so they cannot influence watermarks, state or
     // output — collecting and feeding them only inflated every trigger
-    // input with neither event type correlates nothing: an empty frame
     val (table, _) = replay(spark,
       events.filter(col("event_type").isin(leftType, rightType)), batches,
-      nSentinels = 0, sentinelStepMs = 0L, emptyOk = true) { in =>
+      nSentinels = 0, sentinelStepMs = 0L) { in =>
       StreamingValidation.streamStreamCorrelate(
         in.filter(col("event_type") === leftType),
         in.filter(col("event_type") === rightType),

@@ -259,11 +259,11 @@ object StreamingValidation {
                     psiThreshold: Double = 0.2): DataFrame = {
     val bins = refHist.counts.length
     val lo = refHist.lo; val hi = refHist.hi
-    val width = (hi - lo) / bins
-    val bin = least(lit(bins - 1), greatest(lit(0),
-      floor((col(valueCol).cast("double") - lo) / width).cast("int")))
+    // binned and NaN-dropped exactly like the batch twin's histograms
+    val v = col(valueCol).cast("double")
+    val bin = graft.checks.Drift.binOf(v, lo, hi, bins)
     val binAggs = (0 until bins).map(i =>
-      sum(when(col(valueCol).isNotNull && bin === i, 1L).otherwise(0L)).as(s"__bin$i"))
+      sum(when(v.isNotNull && !isnan(v) && bin === i, 1L).otherwise(0L)).as(s"__bin$i"))
     val ksUdf = udf { counts: Seq[Long] =>
       graft.checks.Drift.ks(refHist,
         graft.checks.Drift.Histogram(lo, hi, counts.toArray))

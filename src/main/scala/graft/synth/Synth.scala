@@ -103,12 +103,6 @@ object Synth {
     Pcm.encode(s)
   }
 
-  def withLsbNoise(ds: Dataset[AudioClip]): Dataset[AudioClip] = {
-    val spark = ds.sparkSession
-    import spark.implicits._
-    ds.map(c => c.copy(bytes = lsbNoise(c.bytes)))
-  }
-
   /** Generator whose OUTPUT partitioning already matches a bucketed write on
     * (part_id, clip_id): only (idx, part_id, clip_id) — a few bytes per row —
     * cross the repartition shuffle; the heavy `bytes` payload is synthesized
@@ -317,7 +311,7 @@ object Mutations {
 
   /** Transcript-pairing fault: blank one clip's transcript to the EMPTY
     * string (not null — slips past `transcript_not_null`; caught by
-    * `transcript_nonempty_for_speech`, the empty-upload signal).
+    * `transcript_equality` against the reference).
     */
   def blankTranscript(ds: Dataset[AudioClip], partId: String): Dataset[AudioClip] = {
     val spark = ds.sparkSession
@@ -327,9 +321,8 @@ object Mutations {
   }
 
   /** Transcript-pairing fault: stuff one clip's transcript to ~500× its
-    * length — the speaking rate explodes past any physically plausible
-    * chars/sec bound (caught by `transcript_rate_plausible`: the
-    * wrong-pairing / concatenated-upload signal).
+    * length, the concatenated-upload shape (caught by
+    * `transcript_equality` against the reference).
     */
   def stuffTranscript(ds: Dataset[AudioClip], partId: String): Dataset[AudioClip] = {
     val spark = ds.sparkSession

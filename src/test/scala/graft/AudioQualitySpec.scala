@@ -211,12 +211,25 @@ class AudioQualitySpec extends SparkSpec {
     import graft.runner.{ValidationConfig, ValidationSession}
     import graft.synth.{Mutations, Synth}
     import graft.checks.AudioChecks
+    import graft.model.{Check, RuleGroup, Severity}
     val ref = Synth.clipsRef(spark, 3, 60, maxAudioMs = 400).cache()
     val dim = Synth.dimCodec(spark).toDF()
     val cand = Mutations.stuffTranscript(
       Mutations.blankTranscript(ref, "p0000"), "p0001")
-    val cfg = ValidationConfig(
-      predicateChecks = AudioChecks.defaults ++ AudioQuality.transcriptChecks())
+    // transcript/audio pairing as two ordinary predicate checks: a speaking
+    // rate (trimmed chars per second) outside [1, 500], and an empty
+    // transcript on a clip of at least 150 ms
+    val chars = length(trim($"transcript"))
+    val cps = chars.cast("double") * lit(1000.0) / $"dur_ms".cast("double")
+    val transcriptChecks = Seq(
+      Check("transcript_rate_plausible", RuleGroup.OutOfRange, Severity.Warning,
+        $"transcript".isNotNull && chars > 0 && $"dur_ms".isNotNull && $"dur_ms" > 0 &&
+          (cps < 1.0 || cps > 500.0),
+        "speaking rate must stay in [1, 500] chars/sec"),
+      Check("transcript_nonempty_for_speech", RuleGroup.MissingValues, Severity.Warning,
+        $"dur_ms".isNotNull && $"dur_ms" >= 150 && $"transcript".isNotNull && chars === 0,
+        "clips >= 150ms must carry a non-empty transcript"))
+    val cfg = ValidationConfig(predicateChecks = AudioChecks.defaults ++ transcriptChecks)
     val sess = new ValidationSession(spark, cfg)
     def outcomes(r: graft.runner.ValidationReport): Map[String, (String, Long)] =
       r.outcomes.map(o => o.checkName -> (o.status, o.rowsFailed)).toMap

@@ -78,4 +78,23 @@ class MartSpec extends SparkSpec {
     assert(out2("mart_kpi_missing_year").status === "FAIL")
     assert(out2("mart_kpi_missing_year").rowsFailed === 1)
   }
+
+  test("runChecks: a failing KPI job leaves no party job running when it throws") {
+    val (o, l, c) = fixtures
+    val failing = udf { (n: Long) =>
+      Thread.sleep(500)
+      if (n > Long.MinValue) throw new IllegalStateException("kpi job failed")
+      n
+    }
+    val slow = udf { (id: Long) => Thread.sleep(3000); id }
+    val kpi = Mart.orderSeasonKpi(o, l, c)
+      .withColumn("orders_total", failing(col("orders_total")))
+    val party = spark.range(0, 2, 1, 2).select(lit("cust").as("role"),
+      slow(col("id")).as("party_id"), lit(2024).as("season_year"))
+    val running = jobsRunningAfter {
+      intercept[Exception](Mart.runChecks(kpi, party))
+      ()
+    }
+    assert(running.isEmpty, s"job(s) $running still running after runChecks threw")
+  }
 }

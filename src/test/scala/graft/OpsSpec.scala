@@ -82,8 +82,8 @@ class OpsSpec extends SparkSpec {
   }
 
   test("simhash near-dup detects exact + near pairs via hamming <= 3") {
-    val pairs = Dedup.nearDuplicatesSimhash(docDf, "doc_id", "text")
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getAs[Number](2).intValue)).toList
+    val pairs = Dedup.nearDuplicatesSimhashSigs(docDf, "doc_id", "text")
+      .select("id_a", "id_b", "hamming").collect().map(r => (r.getLong(0), r.getLong(1), r.getAs[Number](2).intValue)).toList
     val keys = pairs.map(p => (p._1, p._2)).toSet
     assert(keys.contains((1L, 4L)))
     assert(pairs.find(p => p._1 == 1L && p._2 == 4L).get._3 == 0) // identical → hamming 0
@@ -311,36 +311,12 @@ class OpsSpec extends SparkSpec {
     assert(exhaustive === brute)
   }
 
-  test("multi-table LSH: planted neighbor found; candidates grow with tables") {
-    val base = (0 until 64).map(i => math.sin(i * 0.3).toFloat)
-    val near = base.zipWithIndex.map { case (v, i) => if (i == 0) v + 0.01f else v }
-    val rest = (2L until 200L).map(id =>
-      (id, (0 until 64).map(i => (graft.synth.Synth.mix64(id * 64 + i) % 1000 / 1000.0).toFloat)))
-    val vecs = (Seq((0L, base), (1L, near)) ++ rest).toDF("vec_id", "embedding")
-    val pool = vecs.filter($"vec_id" =!= 0)
-    val top = Similarity.topKLshMulti(pool, "vec_id", "embedding", base, 5,
-      tables = 8, planes = 8).collect()
-    assert(top.nonEmpty && top.head.getLong(0) == 1L)
-    assert(top.head.getDouble(1) > 0.999)
-    // OR-construction monotonicity: more tables can only ADD candidates
-    def candidates(tables: Int): Set[Long] = {
-      val qSigs = Similarity.querySignatures(base, tables, 8)
-      Similarity.hyperplaneBucketsMulti(pool, "embedding", tables, 8, 64)
-        .filter((0 until tables).map(t => col("buckets")(t) === qSigs(t))
-          .reduce(_ || _))
-        .select("vec_id").as[Long].collect().toSet
-    }
-    val c1 = candidates(1); val c4 = candidates(4); val c8 = candidates(8)
-    assert(c1.subsetOf(c4) && c4.subsetOf(c8))
-    assert(c8.size < 200, "multi-table probe must still prune")
-  }
-
   test("embedding cosine near-dup pairs via LSH") {
     val base = (0 until 64).map(i => math.sin(i * 0.3).toFloat)
     val near = base.zipWithIndex.map { case (v, i) => if (i == 0) v + 0.01f else v }
     val vecs = Seq((0L, base), (1L, near),
       (2L, (0 until 64).map(i => math.cos(i * 1.7).toFloat))).toDF("vec_id", "embedding")
-    val pairs = Dedup.nearDuplicatesEmbedding(vecs, "vec_id", "embedding", threshold = 0.99)
+    val pairs = Similarity.cosinePairsLsh(vecs, "vec_id", "embedding", threshold = 0.99)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(pairs == Set((0L, 1L)))
   }

@@ -88,10 +88,13 @@ class RobustStatsSpec extends SparkSpec {
     // exp (5,5) -> 5+5 = 10
     assert(rows(0).getAs[Long]("chi_term_1e6") == 3333333L)
     assert(rows(1).getAs[Long]("chi_term_1e6") == 10000000L)
-    val outcome = Drift.chiSquareCheck(ref, cand, "c", critical = 3.84)
-    assert(outcome.status == "FAIL")
-    val pass = Drift.chiSquareCheck(ref, ref, "c", critical = 3.84)
-    assert(pass.status == "PASS")
+    // the statistic is the sum of the terms; against the 1-dof 5% critical
+    // value 3.84 it FAILs, and identical sides (statistic 0) PASS
+    def stat(c: org.apache.spark.sql.DataFrame): Double =
+      Drift.chiSquareCategorical(ref, c, "c").collect()
+        .map(_.getAs[Long]("chi_term_1e6")).sum / 1e6
+    assert(stat(cand) > 3.84)
+    assert(stat(ref) <= 3.84)
   }
 
   test("entropyProfile: hand-computed terms, nulls excluded") {

@@ -238,20 +238,6 @@ class ScaleGuardSpec extends SparkSpec {
     assert(math.abs(a - e) / e < 0.05, s"approx $a vs exact $e")
   }
 
-  test("groupedKsCheck refuses an unbounded grouping column past maxGroups") {
-    val s = spark; import s.implicits._
-    val ref = (0 until 30).map(i => (s"g$i", i.toDouble)).toDF("g", "v")
-    val ex = intercept[IllegalArgumentException] {
-      graft.checks.Drift.groupedKsCheck(ref, ref, "g", "v",
-        lo = 0.0, hi = 32.0, bins = 4, maxGroups = 10)
-    }
-    assert(ex.getMessage.contains("bounded grouping column"))
-    // within the bound: one verdict per group, identical sides all PASS
-    val ok = graft.checks.Drift.groupedKsCheck(ref, ref, "g", "v",
-      lo = 0.0, hi = 32.0, bins = 4, maxGroups = 100)
-    assert(ok.size == 30 && ok.forall(_.status == "PASS"))
-  }
-
   test("emdTerms refuses an unbounded grid up front") {
     val s = spark; import s.implicits._
     val df = Seq(1.0, 2.0).toDF("v")

@@ -27,34 +27,50 @@ abstract class SparkSpec extends AnyFunSuite {
     * listener bus delivers in order, so every job `body` started has been
     * seen once the closing sentinel has.
     */
-  protected def jobsDuring(body: => Unit): Int = {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+  protected def jobsDuring(body: => Unit): Int = trackJobs(body)._1
+
+  /** Ids of the Spark jobs `body` started that had not ended when it
+    * returned. Spark posts a job's end before its action returns, so a job
+    * an awaited action ran is never in the set.
+    */
+  protected def jobsRunningAfter(body: => Unit): Set[Int] = trackJobs(body)._2
+
+  private def trackJobs(body: => Unit): (Int, Set[Int]) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
     val sc = spark.sparkContext
-    val seen = new java.util.concurrent.LinkedBlockingQueue[String]()
+    // (job id, "job" | sentinel tag on start, "end" on end)
+    val seen = new java.util.concurrent.LinkedBlockingQueue[(Int, String)]()
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
-        seen.put(Option(e.properties).flatMap(p => Option(p.getProperty("graft.sentinel")))
-          .getOrElse("job"))
+        seen.put(e.jobId -> Option(e.properties)
+          .flatMap(p => Option(p.getProperty("graft.sentinel"))).getOrElse("job"))
+      override def onJobEnd(e: SparkListenerJobEnd): Unit = seen.put(e.jobId -> "end")
     }
     def sentinel(tag: String): Unit = {
       sc.setLocalProperty("graft.sentinel", tag)
       try sc.parallelize(Seq(1), 1).count() finally sc.setLocalProperty("graft.sentinel", null)
     }
-    def drainUntil(tag: String): Int = {
-      var jobs = 0
+    var jobs = 0
+    val running = scala.collection.mutable.Set[Int]()
+    def drainUntil(tag: String): Unit = {
       var next = seen.poll(30, java.util.concurrent.TimeUnit.SECONDS)
-      while (next != tag) {
+      while (next == null || next._2 != tag) {
         assert(next != null, s"sentinel $tag never reached the listener")
-        if (next == "job") jobs += 1
+        next match {
+          case (id, "job") => jobs += 1; running += id
+          case (id, "end") => running -= id
+          case _ =>
+        }
         next = seen.poll(30, java.util.concurrent.TimeUnit.SECONDS)
       }
-      jobs
     }
     sc.addSparkListener(listener)
     try {
       sentinel("open"); drainUntil("open")
+      jobs = 0; running.clear()
       body
       sentinel("close"); drainUntil("close")
+      (jobs, running.toSet)
     } finally sc.removeSparkListener(listener)
   }
 
