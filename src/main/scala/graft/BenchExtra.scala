@@ -159,10 +159,10 @@ object BenchExtra {
         for (_ <- 1 to args.lift(1).map(_.toInt).getOrElse(3)) {
           val docs = spark.read.parquet(s"$sfDir/documents.parquet")
           ph("simhash sigs (md5)") {
-            noop(Dedup.simhash(docs, "doc_id", "text", Dedup.md5TokenHash60, 60)) }
+            noop(Dedup.simhash(docs, "doc_id", "text", Dedup.TokenHash.Md5Hash60, 60)) }
           ph("full simhash pairs") {
             noop(Dedup.nearDuplicatesSimhashSigs(docs, "doc_id", "text",
-              maxBucket = Int.MaxValue, tokenHash = Dedup.md5TokenHash60, bits = 60)) }
+              maxBucket = Int.MaxValue, tokenHash = Dedup.TokenHash.Md5Hash60, bits = 60)) }
         }
       case "probedup" =>
         import org.apache.spark.sql.functions._

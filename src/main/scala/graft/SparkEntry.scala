@@ -666,7 +666,7 @@ object SparkEntry {
     "q_simhash_pairs" -> ((s, dir) => {
       Dedup.nearDuplicatesSimhashSigs(t(s, dir, "documents"), "doc_id", "text",
           maxBucket = Int.MaxValue,
-          tokenHash = Dedup.md5TokenHash60, bits = 60)
+          tokenHash = Dedup.TokenHash.Md5Hash60, bits = 60)
         .orderBy(col("id_a"), col("id_b"))
     }),
 

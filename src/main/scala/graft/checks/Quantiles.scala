@@ -7,7 +7,8 @@ import org.apache.spark.sql.functions._
   * replacement for SQL `percentile(col, q)`, which buffers every value of
   * the group in one aggregation buffer (an executor-memory scale-killer on
   * a 10^12-row table; the approximate path for monitoring is
-  * percentile_approx / [[graft.functions.TDigest]], this operator is for
+  * percentile_approx / the KLL sketches of
+  * [[ColumnStats.profilePerPartition]], this operator is for
   * when the verdict must be EXACT, e.g. oracle parity checks).
   *
   * Classic distributed k-th-element selection:

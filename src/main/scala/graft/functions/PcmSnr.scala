@@ -1,12 +1,13 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.{FunctionIdentifier, InternalRow}
+import org.apache.spark.sql.catalyst.analysis.FunctionRegistry.FunctionBuilder
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo, Literal}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-import org.apache.spark.sql.types.{BinaryType, DataType, DoubleType}
+import org.apache.spark.sql.types.{BinaryType, DataType, DoubleType, NullType}
 import graft.audio.Pcm
 
 /** Native Catalyst expression for the engine's hottest scalar: decoded-PCM
@@ -60,9 +61,10 @@ case class PcmSnr(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
-/** Registration hooks: Column form for the DataFrame API, a SQL function
-  * `pcm_snr(ref, cand)` registrable on a live session, and a
-  * SparkSessionExtensions injector for `spark.sql.extensions=graft.functions.GraftExtensions`.
+/** Registration hooks: Column forms for the DataFrame API, and one SQL
+  * function table (`pcm_snr`, `pcm_stats`, `pcm_fingerprint`, `pcm_hum`)
+  * registrable on a live session or injected through
+  * `spark.sql.extensions=graft.functions.GraftExtensions`.
   */
 object GraftFunctions {
 
@@ -92,85 +94,47 @@ object GraftFunctions {
       PcmHum(bytes.expr, srHz.expr))
   }
 
-  /** One source of truth for the SQL registration, shared by the live
-    * session registry and the extensions injector — the two paths must
-    * never drift on name/arity.
+  /** The SQL function table, the one source of truth for both
+    * registration paths: [[register]] (a live session's registry) and
+    * [[GraftExtensions]] (`spark.sql.extensions`) iterate it, so the two
+    * can never drift on name or arity. An untyped NULL literal
+    * (`pcm_snr(x, NULL)`) arrives as NullType, which the strict BinaryType
+    * input checks would reject at analysis; the builders retype it so the
+    * documented NULL semantics hold in SQL.
     */
-  private[functions] val info = new ExpressionInfo(classOf[PcmSnr].getName, "pcm_snr")
-  private[functions] val builder = (children: Seq[Expression]) => {
-    require(children.size == 2, "pcm_snr(ref_bytes, cand_bytes) takes 2 arguments")
-    // an untyped NULL literal (SELECT pcm_snr(x, NULL)) arrives as NullType,
-    // which the strict BinaryType input check would reject at analysis —
-    // retype it so the documented null→-Inf violation semantics hold in SQL
-    val typed = children.map {
-      case e if e.dataType == org.apache.spark.sql.types.NullType =>
-        org.apache.spark.sql.catalyst.expressions.Literal(
-          null, org.apache.spark.sql.types.BinaryType)
-      case e => e
-    }
-    PcmSnr(typed(0), typed(1))
-  }
+  private[functions] val sqlFunctions: Seq[(FunctionIdentifier, ExpressionInfo, FunctionBuilder)] = Seq(
+    sqlFunction("pcm_snr", classOf[PcmSnr], "pcm_snr(ref_bytes, cand_bytes)", 2)(c =>
+      PcmSnr(retypeNullLiteral(c(0)), retypeNullLiteral(c(1)))),
+    sqlFunction("pcm_stats", classOf[PcmStats], "pcm_stats(bytes)", 1)(c =>
+      PcmStats(retypeNullLiteral(c(0)))),
+    sqlFunction("pcm_fingerprint", classOf[PcmFingerprint], "pcm_fingerprint(bytes)", 1)(c =>
+      PcmFingerprint(retypeNullLiteral(c(0)))),
+    sqlFunction("pcm_hum", classOf[PcmHum], "pcm_hum(bytes, sr_hz)", 2)(c =>
+      PcmHum(retypeNullLiteral(c(0)), c(1))))
 
-  private[functions] val statsInfo =
-    new ExpressionInfo(classOf[PcmStats].getName, "pcm_stats")
-  private[functions] val statsBuilder = (children: Seq[Expression]) => {
-    require(children.size == 1, "pcm_stats(bytes) takes 1 argument")
-    PcmStats(retypeNullLiteral(children.head))
-  }
-
-  private[functions] val fingerprintInfo =
-    new ExpressionInfo(classOf[PcmFingerprint].getName, "pcm_fingerprint")
-  private[functions] val fingerprintBuilder = (children: Seq[Expression]) => {
-    require(children.size == 1, "pcm_fingerprint(bytes) takes 1 argument")
-    PcmFingerprint(retypeNullLiteral(children.head))
-  }
-
-  private[functions] val humInfo =
-    new ExpressionInfo(classOf[PcmHum].getName, "pcm_hum")
-  private[functions] val humBuilder = (children: Seq[Expression]) => {
-    require(children.size == 2, "pcm_hum(bytes, sr_hz) takes 2 arguments")
-    PcmHum(retypeNullLiteral(children.head), children(1))
-  }
+  private def sqlFunction(name: String, cls: Class[_], signature: String, arity: Int)(
+      build: Seq[Expression] => Expression): (FunctionIdentifier, ExpressionInfo, FunctionBuilder) =
+    (FunctionIdentifier(name), new ExpressionInfo(cls.getName, name), children => {
+      require(children.size == arity,
+        s"$signature takes $arity argument${if (arity == 1) "" else "s"}")
+      build(children)
+    })
 
   private def retypeNullLiteral(e: Expression): Expression =
-    if (e.dataType == org.apache.spark.sql.types.NullType)
-      org.apache.spark.sql.catalyst.expressions.Literal(
-        null, org.apache.spark.sql.types.BinaryType)
-    else e
+    if (e.dataType == NullType) Literal(null, BinaryType) else e
 
   /** Register the pcm functions in a live session's function registry. */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    reg.registerFunction(
-      org.apache.spark.sql.catalyst.FunctionIdentifier("pcm_snr"), info, builder)
-    reg.registerFunction(
-      org.apache.spark.sql.catalyst.FunctionIdentifier("pcm_stats"),
-      statsInfo, statsBuilder)
-    reg.registerFunction(
-      org.apache.spark.sql.catalyst.FunctionIdentifier("pcm_fingerprint"),
-      fingerprintInfo, fingerprintBuilder)
-    reg.registerFunction(
-      org.apache.spark.sql.catalyst.FunctionIdentifier("pcm_hum"),
-      humInfo, humBuilder)
-    ()
-  }
+  def register(spark: SparkSession): Unit =
+    sqlFunctions.foreach { case (id, info, builder) =>
+      spark.sessionState.functionRegistry.registerFunction(id, info, builder)
+    }
 }
 
 /** `SparkSessionExtensions` injector — enables
   * `--conf spark.sql.extensions=graft.functions.GraftExtensions` on
-  * spark-submit so `pcm_snr` is available in pure SQL everywhere.
+  * spark-submit so every pcm function is available in pure SQL everywhere.
   */
 class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {
-  override def apply(ext: org.apache.spark.sql.SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      org.apache.spark.sql.catalyst.FunctionIdentifier("pcm_snr"),
-      GraftFunctions.info, GraftFunctions.builder))
-    ext.injectFunction((
-      org.apache.spark.sql.catalyst.FunctionIdentifier("pcm_stats"),
-      GraftFunctions.statsInfo, GraftFunctions.statsBuilder))
-    ext.injectFunction((
-      org.apache.spark.sql.catalyst.FunctionIdentifier("pcm_fingerprint"),
-      GraftFunctions.fingerprintInfo, GraftFunctions.fingerprintBuilder))
-    ()
-  }
+  override def apply(ext: org.apache.spark.sql.SparkSessionExtensions): Unit =
+    GraftFunctions.sqlFunctions.foreach(ext.injectFunction)
 }

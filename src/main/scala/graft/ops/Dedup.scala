@@ -238,95 +238,95 @@ object Dedup {
     minhashLshPairs(minhashSignatures(df, idCol, textCol, numHashes, shingleK),
       idCol, bands, threshold)
 
-  /** SimHash: sign-sum of per-token hash bits, weighted by term count.
-    * One exploded pass + `bits` conditional sums in one groupBy — same scale
-    * shape as minhash. The token hash is pluggable: the engine default is
-    * xxhash64 (codegen'd, 64 bits); [[md5TokenHash60]] trades speed for an
-    * oracle-reproducible hash.
+  /** Token hash of [[simhash]]: a closed choice of two, each with a JVM
+    * form that the per-document fold runs.
     */
-  def simhash(df: DataFrame, idCol: String, textCol: String,
-              tokenHash: Column => Column = xxhash64(_),
-              bits: Int = 64): DataFrame =
-    // the md5 token hash is JVM-reproducible, so its signatures fold per
-    // document in ONE narrow map pass — no token explode, no 1M-row
-    // shuffle, no `bits`-column aggregate (round-7 measurement: the
-    // exploded form was ~60% of q_simhash_pairs' wall). Other hashes
-    // (e.g. codegen'd xxhash64) keep the exploded Column form.
-    if (tokenHash eq md5TokenHash60) {
-      df.select(col(idCol), simhashMd5Udf(bits)(col(textCol)).as("simhash"))
-        .filter(col("simhash").isNotNull) // token-less docs vanish, as the
-        // exploded form's groupBy-after-explode drops them
-    } else {
-      val tok = df.select(col(idCol),
-        explode(TextAnalysis.tokens(lower(col(textCol)))).as("__t"))
-        .withColumn("__h", tokenHash(col("__t")))
-      val bitSums = (0 until bits).map { b =>
-        sum(when(col("__h").bitwiseAND(lit(1L << b)) =!= 0L, 1L).otherwise(-1L)).as(s"__b$b")
-      }
-      tok.groupBy(col(idCol)).agg(bitSums.head, bitSums.tail: _*)
-        .select(col(idCol),
-          (0 until bits).map(b => when(col(s"__b$b") > 0, lit(1L << b)).otherwise(lit(0L)))
-            .reduce((x, y) => x.bitwiseOR(y)).as("simhash"))
-    }
-
-  /** 60-bit token hash parsed from the md5 hex prefix. Unlike xxhash64 this
-    * is reproducible OUTSIDE Spark from the hex string alone (bit b lives
-    * in hex digit 15 - b/4 at in-digit position b%4), which is what lets
-    * the DuckDB oracle recompute the full simhash signature bit-for-bit.
-    * 15 hex chars = 60 bits < 2^63, so the big-endian parse always fits a
-    * long with identical semantics in every engine.
-    *
-    * A stable function VALUE (not a def) so [[simhash]] can recognize it
-    * by reference and take the fused per-document fast path.
-    */
-  val md5TokenHash60: Column => Column = tok =>
-    conv(substring(md5(tok), 1, 15), 16, 10).cast("long")
-
-  /** JVM twin of [[md5TokenHash60]]: first 15 hex chars of md5(token UTF-8)
-    * parsed big-endian == the first 8 digest bytes as an unsigned 64-bit
-    * value shifted right 4 (dropping the 16th nibble). Bit-identical to the
-    * Column form — pinned by OpsSpec against conv(substring(md5...)).
-    */
-  private def md5Hash60Jvm(md: java.security.MessageDigest, tok: String): Long = {
-    md.reset()
-    val d = md.digest(tok.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    val be = ((d(0) & 0xFFL) << 56) | ((d(1) & 0xFFL) << 48) |
-      ((d(2) & 0xFFL) << 40) | ((d(3) & 0xFFL) << 32) |
-      ((d(4) & 0xFFL) << 24) | ((d(5) & 0xFFL) << 16) |
-      ((d(6) & 0xFFL) << 8) | (d(7) & 0xFFL)
-    be >>> 4
+  sealed abstract class TokenHash extends Serializable {
+    /** A fresh token hasher; the fold builds one per partition. */
+    private[Dedup] def newHasher(): String => Long
   }
 
-  /** Whole-document simhash fold over [[md5Hash60Jvm]] token hashes:
-    * identical sign-sum semantics to the exploded Column form (per token
-    * OCCURRENCE: +1 for a set bit, −1 for a clear bit; final bit set iff
-    * the sum is strictly positive), with repeated tokens hashed once via a
-    * per-document memo. Returns null for token-less documents.
-    */
-  private def simhashMd5Udf(bits: Int) = udf { text: String =>
-    val toks = tokenize(text)
-    if (toks.isEmpty) Option.empty[Long]
-    else {
-      val md = java.security.MessageDigest.getInstance("MD5")
-      val memo = new java.util.HashMap[String, java.lang.Long]()
-      val sums = new Array[Int](bits)
-      var i = 0
-      while (i < toks.length) {
-        val t = toks(i)
-        var h = memo.get(t)
-        if (h == null) { h = java.lang.Long.valueOf(md5Hash60Jvm(md, t)); memo.put(t, h) }
-        val hv = h.longValue()
-        var b = 0
-        while (b < bits) {
-          if (((hv >>> b) & 1L) != 0L) sums(b) += 1 else sums(b) -= 1
-          b += 1
-        }
-        i += 1
+  object TokenHash {
+
+    /** Spark's `xxhash64` of the token (seed 42 over its UTF-8 bytes):
+      * 64 bits, the engine default.
+      */
+    case object XxHash64 extends TokenHash {
+      private[Dedup] def newHasher(): String => Long = { tok =>
+        val b = tok.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+        org.apache.spark.sql.catalyst.expressions.XXH64.hashUnsafeBytes(
+          b, org.apache.spark.unsafe.Platform.BYTE_ARRAY_OFFSET, b.length, 42L)
       }
-      var sig = 0L
-      var b = 0
-      while (b < bits) { if (sums(b) > 0) sig |= 1L << b; b += 1 }
-      Some(sig)
+    }
+
+    /** The first 15 hex digits of md5(token) read as a long: 60 bits.
+      * Unlike xxhash64 this is reproducible OUTSIDE Spark from the hex
+      * string alone (bit b lives in hex digit 15 − b/4 at in-digit position
+      * b%4), which is what lets the DuckDB oracle recompute the full
+      * simhash signature bit-for-bit. 15 hex digits = 60 bits < 2^63, so
+      * the big-endian parse fits a long with identical semantics in every
+      * engine. The JVM form reads the first 8 digest bytes as an unsigned
+      * 64-bit value shifted right 4 (dropping the 16th nibble).
+      */
+    case object Md5Hash60 extends TokenHash {
+      private[Dedup] def newHasher(): String => Long = {
+        val md = java.security.MessageDigest.getInstance("MD5")
+        tok => {
+          val d = md.digest(tok.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+          val be = ((d(0) & 0xFFL) << 56) | ((d(1) & 0xFFL) << 48) |
+            ((d(2) & 0xFFL) << 40) | ((d(3) & 0xFFL) << 32) |
+            ((d(4) & 0xFFL) << 24) | ((d(5) & 0xFFL) << 16) |
+            ((d(6) & 0xFFL) << 8) | (d(7) & 0xFFL)
+          be >>> 4
+        }
+      }
+    }
+  }
+
+  /** SimHash: sign-sum of per-token hash bits, weighted by term count,
+    * folded per document in ONE narrow map pass (no shuffle). Per token
+    * OCCURRENCE a set bit adds +1 and a clear bit −1; the signature bit is
+    * set iff the sum is strictly positive. Token-less documents are absent
+    * from the output.
+    */
+  def simhash(df: DataFrame, idCol: String, textCol: String,
+              tokenHash: TokenHash = TokenHash.XxHash64,
+              bits: Int = 64): DataFrame =
+    df.select(col(idCol), udf(new SimhashFold(tokenHash, bits)).apply(col(textCol)).as("simhash"))
+      .filter(col("simhash").isNotNull)
+
+  /** The per-document simhash fold. The hasher is transient, so each task
+    * builds its own (one MessageDigest per partition) on first use; repeated
+    * tokens of a document are hashed once via a per-document memo.
+    */
+  private final class SimhashFold(tokenHash: TokenHash, bits: Int)
+      extends (String => Option[Long]) with Serializable {
+    @transient private lazy val hash = tokenHash.newHasher()
+
+    def apply(text: String): Option[Long] = {
+      val toks = tokenize(text)
+      if (toks.isEmpty) None
+      else {
+        val memo = new java.util.HashMap[String, java.lang.Long]()
+        val sums = new Array[Int](bits)
+        var i = 0
+        while (i < toks.length) {
+          val t = toks(i)
+          var h = memo.get(t)
+          if (h == null) { h = java.lang.Long.valueOf(hash(t)); memo.put(t, h) }
+          val hv = h.longValue()
+          var b = 0
+          while (b < bits) {
+            if (((hv >>> b) & 1L) != 0L) sums(b) += 1 else sums(b) -= 1
+            b += 1
+          }
+          i += 1
+        }
+        var sig = 0L
+        var b = 0
+        while (b < bits) { if (sums(b) > 0) sig |= 1L << b; b += 1 }
+        Some(sig)
+      }
     }
   }
 
@@ -344,7 +344,7 @@ object Dedup {
   def nearDuplicatesSimhashSigs(df: DataFrame, idCol: String, textCol: String,
                                 maxHamming: Int = 3,
                                 maxBucket: Int = DefaultMaxBucket,
-                                tokenHash: Column => Column = xxhash64(_),
+                                tokenHash: TokenHash = TokenHash.XxHash64,
                                 bits: Int = 64): DataFrame = {
     val sh = simhash(df, idCol, textCol, tokenHash, bits)
     val banded = capBuckets(

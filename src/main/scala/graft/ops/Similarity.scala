@@ -196,10 +196,12 @@ object Similarity {
       val ds = df.select(col(idCol).cast("long"), col(vecCol))
         .where(col(idCol).isNotNull)
         .as[(Long, Array[Float])]
-      // bounded-input guard: the broadcast is only sane where n² is
-      val all = ds.collect()
-      require(all.length <= 200000,
-        s"cosinePairsBrute: ${all.length} rows — all-pairs cosine is a " +
+      // bounded-input guard: the broadcast is only sane where n² is; one
+      // row past the bound is all the collect ever pulls to the driver
+      val maxRows = 200000
+      val all = ds.limit(maxRows + 1).collect()
+      require(all.length <= maxRows,
+        s"cosinePairsBrute: more than $maxRows rows — all-pairs cosine is a " +
           "bounded baseline; use cosinePairsLsh at this size")
       val bc = spark.sparkContext.broadcast(all)
       val thr = threshold

@@ -91,7 +91,7 @@ class OpsSpec extends SparkSpec {
 
   test("md5-60-bit simhash variant: signatures in output, exact dup at hamming 0") {
     val rows = Dedup.nearDuplicatesSimhashSigs(docDf, "doc_id", "text",
-      tokenHash = Dedup.md5TokenHash60, bits = 60).collect()
+      tokenHash = Dedup.TokenHash.Md5Hash60, bits = 60).collect()
     val m = rows.map(r => (r.getLong(0), r.getLong(1)) -> r).toMap
     val r14 = m((1L, 4L))
     assert(r14.getAs[Long]("sh_a") == r14.getAs[Long]("sh_b"))
@@ -103,12 +103,31 @@ class OpsSpec extends SparkSpec {
     }
   }
 
-  test("fused md5 simhash == exploded Column-form simhash, doc for doc") {
-    // the round-7 per-document fast path must reproduce the exploded
-    // sign-sum EXACTLY (occurrence-weighted bits, strict >0 sign, docs
-    // without tokens dropped) — compare against a Column-form computation
-    // that bypasses the fast path by using an eta-expanded copy of the
-    // same hash (a different function object, so `eq` fails)
+  /** Reference simhash: the exploded Column form — one row per token
+    * occurrence, the token hash as a Column expression, `bits` conditional
+    * sign sums in one groupBy. Token-less docs vanish after the explode.
+    */
+  private def explodedSimhash(df: org.apache.spark.sql.DataFrame,
+                              tokenHash: org.apache.spark.sql.Column => org.apache.spark.sql.Column,
+                              bits: Int): Map[Long, Long] = {
+    val tok = df.select(col("doc_id"),
+      explode(TextAnalysis.tokens(lower(col("text")))).as("__t"))
+      .withColumn("__h", tokenHash(col("__t")))
+    val bitSums = (0 until bits).map { b =>
+      sum(when(col("__h").bitwiseAND(lit(1L << b)) =!= 0L, 1L).otherwise(-1L)).as(s"__b$b")
+    }
+    tok.groupBy(col("doc_id")).agg(bitSums.head, bitSums.tail: _*)
+      .select(col("doc_id"),
+        (0 until bits).map(b => when(col(s"__b$b") > 0, lit(1L << b)).otherwise(lit(0L)))
+          .reduce((x, y) => x.bitwiseOR(y)).as("simhash"))
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+  }
+
+  // the per-document fold must reproduce the exploded sign-sum EXACTLY
+  // (occurrence-weighted bits, strict >0 sign, docs without tokens dropped)
+  private def assertFoldMatchesExploded(hash: Dedup.TokenHash,
+                                        columnHash: org.apache.spark.sql.Column => org.apache.spark.sql.Column,
+                                        bits: Int): Unit = {
     val texts = Seq(
       (1L, "the the the quick brown fox fox"),
       (2L, "a b a b a b"), // heavy repetition → memo path
@@ -118,15 +137,20 @@ class OpsSpec extends SparkSpec {
       (6L, "   "), // token-less → must be absent from BOTH outputs
       (7L, "MiXeD CaSe TOKENS mixed case tokens"))
     val df = texts.toDF("doc_id", "text")
-    val slowHash: org.apache.spark.sql.Column => org.apache.spark.sql.Column =
-      c => Dedup.md5TokenHash60(c) // new lambda: not `eq` the stable val
-    def collect(h: org.apache.spark.sql.Column => org.apache.spark.sql.Column) =
-      Dedup.simhash(df, "doc_id", "text", h, bits = 60)
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val fast = collect(Dedup.md5TokenHash60)
-    val slow = collect(slowHash)
-    assert(fast == slow, s"fused simhash diverged: fast=$fast slow=$slow")
-    assert(!fast.contains(6L))
+    val fused = Dedup.simhash(df, "doc_id", "text", hash, bits)
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val exploded = explodedSimhash(df, columnHash, bits)
+    assert(fused == exploded, s"fused simhash diverged: fused=$fused exploded=$exploded")
+    assert(!fused.contains(6L))
+  }
+
+  test("fused md5 simhash == exploded Column-form simhash, doc for doc") {
+    assertFoldMatchesExploded(Dedup.TokenHash.Md5Hash60,
+      tok => conv(substring(md5(tok), 1, 15), 16, 10).cast("long"), bits = 60)
+  }
+
+  test("fused xxhash64 simhash == exploded Column-form simhash, doc for doc") {
+    assertFoldMatchesExploded(Dedup.TokenHash.XxHash64, xxhash64(_), bits = 64)
   }
 
   test("prefixFilterPairs: complete recall vs brute force, planted + random") {

@@ -3,7 +3,6 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalacheck.{Gen, Prop, Test => SCTest}
 import graft.checks.{CheckCompiler, Uniqueness}
-import graft.functions.TDigest
 import graft.model.{Check, RuleGroup, Severity}
 
 /** ScalaCheck properties over the check algebra (SURVEY §5). Each property
@@ -104,34 +103,37 @@ class PropertySpec extends SparkSpec {
     ()
   }
 
-  test("property: t-digest quantiles bounded by min/max and ordered in q") {
+  private def kllQuantiles(values: Seq[Double], qs: Seq[Double]): Seq[Double] = {
+    val s = spark; import s.implicits._
+    values.toDF("v")
+      .agg(kll_sketch_get_quantile_double(kll_sketch_agg_double(col("v")),
+        array(qs.map(lit): _*)))
+      .head().getSeq[Double](0)
+  }
+
+  test("property: KLL quantiles bounded by min/max and ordered in q") {
     val gen = for {
       n <- Gen.choose(2, 500)
       values <- Gen.listOfN(n, Gen.choose(-1e6, 1e6))
     } yield values
     check(Prop.forAll(gen) { values =>
-      var buf = TDigest.empty(100.0)
-      values.foreach(v => buf = TDigest.add(buf, v))
-      val qs = Seq(0.1, 0.25, 0.5, 0.75, 0.9)
-      val est = TDigest.quantiles(buf, qs)
+      val est = kllQuantiles(values, Seq(0.1, 0.25, 0.5, 0.75, 0.9))
       val lo = values.min; val hi = values.max
       est.forall(e => e >= lo && e <= hi) &&
         est.zip(est.tail).forall { case (a, b) => a <= b }
     }, n = 30)
   }
 
-  test("property: t-digest median within tight rank error of exact") {
+  test("property: KLL median within tight rank error of exact") {
     val gen = for {
       n <- Gen.choose(50, 400)
       values <- Gen.listOfN(n, Gen.choose(0.0, 1e4))
     } yield values
     check(Prop.forAll(gen) { values =>
-      var buf = TDigest.empty(100.0)
-      values.foreach(v => buf = TDigest.add(buf, v))
-      val est = TDigest.quantile(buf, 0.5)
-      // rank of the estimate must sit within 5% of the true median rank
-      val rank = values.count(_ <= est).toDouble / values.size
-      rank >= 0.40 && rank <= 0.60
+      val est = kllQuantiles(values, Seq(0.5)).head
+      // the estimate's rank sits within 2ε of the true median rank
+      ApproxBoundsSpec.rankError(values.toArray.sorted, 0.5, est) <=
+        2 * ApproxBoundsSpec.Eps
     }, n = 20)
   }
 }

@@ -2,12 +2,11 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.checks.ExactQuantiles
-import graft.functions.TDigest
 import graft.ops.Dedup
 
 /** Scale-guard behaviors: LSH hot-bucket caps, the exact-verified near-dup
-  * pipeline, distributed exact quantiles, and null handling in the sketch
-  * aggregators.
+  * pipeline, distributed exact quantiles, null handling in the quantile
+  * sketch, and the brute-force cosine input bound.
   */
 class ScaleGuardSpec extends SparkSpec {
 
@@ -219,14 +218,32 @@ class ScaleGuardSpec extends SparkSpec {
     assert(top.head.getAs[Double]("cosine") > 0.999)
   }
 
-  test("t-digest aggregators skip NULL inputs instead of folding in 0.0") {
+  test("KLL sketch skips NULL and NaN inputs instead of folding them in") {
     val s = spark; import s.implicits._
-    val withNulls = ((1 to 100).map(i => Some(i.toDouble * 10)) ++ Seq.fill(50)(None))
-      .toDF("v")
-    val med = withNulls.agg(TDigest.tdigestQuantiles(col("v"), Seq(0.5)))
-      .head.getSeq[Double](0).head
+    val withNulls = ((1 to 100).map(i => Some(i.toDouble * 10)) ++ Seq.fill(50)(None) ++
+      Seq.fill(5)(Some(Double.NaN))).toDF("v")
+    val r = withNulls.agg(kll_sketch_agg_double(col("v")).as("sk"))
+      .select(kll_sketch_get_n_double(col("sk")),
+        kll_sketch_get_quantile_double(col("sk"), lit(0.5)))
+      .head()
+    assert(r.getAs[Number](0).longValue == 100L)
     // nulls skipped → median ≈ 505; nulls-as-zero would drag it to ~340
+    val med = r.getDouble(1)
     assert(math.abs(med - 505.0) < 30.0, s"median with nulls: $med")
+  }
+
+  test("cosinePairsBrute refuses an oversize input before collecting it") {
+    // a vector that fails past the bound: the guard must fire without
+    // materializing any row beyond the first 200001
+    val vec = udf { (id: Long) =>
+      if (id > 200001L) throw new IllegalStateException(s"row $id materialized")
+      Array(1.0f, id.toFloat)
+    }
+    val big = spark.range(0, 300000, 1, 1).select(col("id"), vec(col("id")).as("v"))
+    val err = intercept[IllegalArgumentException] {
+      graft.ops.Similarity.cosinePairsBrute(big, "id", "v", 0.9)
+    }
+    assert(err.getMessage.contains("cosinePairsBrute"))
   }
 
   test("HLL approx distinct stays within 5% of exact (U3 tolerance)") {
