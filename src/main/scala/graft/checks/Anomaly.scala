@@ -18,7 +18,7 @@ import org.apache.spark.sql.functions._
   */
 object Anomaly {
 
-  /** Ingest-volume anomaly: bucket rows per (group, day of `tsCol`),
+  /** Load-volume anomaly: bucket rows per (group, day of `tsCol`),
     * compare each day's count to the trailing average over the previous
     * `lookback` days THAT EXIST in the data (rows-between frame, so a
     * group's first days compare against however much history there is;
