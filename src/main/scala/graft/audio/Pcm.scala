@@ -161,46 +161,6 @@ object Pcm {
     Seq("n_samples", "peak_abs", "rms", "dbfs", "clip_ratio",
       "silence_ratio", "zcr")
 
-  /** 64-bit energy-envelope fingerprint: the payload is cut into 65 equal
-    * frames and bit i is set iff frame i+1 carries MORE energy than frame
-    * i. Sign-of-delta coding is the classic content-fingerprint trick
-    * (Haitsma & Kalker, "A Highly Robust Audio Fingerprint System",
-    * ISMIR 2002 — theirs is per-band spectral; this is the time-domain
-    * energy special case): per-sample noise perturbs each frame energy by
-    * O(len·|s|) while adjacent-frame energy DIFFERENCES of real signals are
-    * O(len·s²), so small-noise copies land within a few hamming bits while
-    * different content decorrelates to ~32. Returns 0 for payloads too
-    * short to frame (callers treat 0 as unfingerprintable).
-    */
-  def energyFingerprint64(bytes: Array[Byte]): Long = {
-    if (bytes == null) return 0L
-    val n = bytes.length / 2
-    val frames = 65
-    val len = n / frames
-    if (len == 0) return 0L
-    val energy = new Array[Double](frames)
-    var f = 0
-    while (f < frames) {
-      var e = 0.0
-      var i = f * len
-      val end = i + len
-      while (i < end) {
-        val s = (((bytes(2 * i) & 0xFF) | (bytes(2 * i + 1) << 8)).toShort).toDouble
-        e += s * s
-        i += 1
-      }
-      energy(f) = e
-      f += 1
-    }
-    var fp = 0L
-    var b = 0
-    while (b < 64) {
-      if (energy(b + 1) > energy(b)) fp |= (1L << b)
-      b += 1
-    }
-    fp
-  }
-
   /** Recording-chain-fault kernel: DC offset + mains-hum share, one fused
     * decode pass ([[graft.functions.PcmHum]]).
     *

@@ -1,7 +1,6 @@
 package graft.checks
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.GraftFunctions
 import graft.model._
@@ -104,56 +103,5 @@ object AudioQuality {
         h.getField("hum_ratio") > maxHumRatio,
         s"50/60 Hz mains bins must carry <= ${(maxHumRatio * 100).toInt}% " +
           "of total energy"))
-  }
-
-  /** Near-duplicate AUDIO CONTENT pairs by energy-envelope fingerprint
-    * ([[graft.audio.Pcm.energyFingerprint64]]): all (id_a < id_b) pairs
-    * within `maxHamming` bits. Catches re-encoded / noise-dithered copies
-    * that exact byte hashing ([[graft.ops.Dedup.dedupExact]]) misses.
-    *
-    * Scale shape mirrors the simhash text path: the 64-bit fingerprint is
-    * split into 4×16-bit bands — by pigeonhole, hamming ≤ 3 pairs agree on
-    * at least one full band (complete recall for maxHamming ≤ 3) — ids
-    * join per (band, bucket), buckets are capped deterministically so one
-    * degenerate constant-envelope bucket cannot explode the self-join, and
-    * one exact `bit_count(xor)` verifies each candidate. Only (id,
-    * fingerprint) ever shuffles; payload bytes stay in the scan.
-    */
-  def fingerprintPairs(df: DataFrame, idCol: String,
-                       bytesCol: String = "bytes",
-                       maxHamming: Int = 3,
-                       maxBucket: Int = 1000): DataFrame = {
-    require(maxHamming >= 0 && maxHamming <= 3,
-      "4-band pigeonhole recall holds for maxHamming <= 3 only")
-    val fps = df
-      .select(col(idCol).as("id"),
-        GraftFunctions.pcmFingerprint(col(bytesCol)).as("fp"))
-      .filter(col("fp").isNotNull && col("fp") =!= 0L) // 0 = unfingerprintable
-    val banded = fps.select(col("id"), col("fp"), posexplode(array(
-        (0 until 4).map(b =>
-          shiftrightunsigned(col("fp"), 16 * b).bitwiseAND(lit(0xFFFFL))): _*))
-      .as(Seq("band", "bucket")))
-    val capped = banded
-      .withColumn("__rn", row_number().over(
-        Window.partitionBy(col("band"), col("bucket")).orderBy(col("id"))))
-      .filter(col("__rn") <= maxBucket)
-      .drop("__rn")
-    // renamed projections (fresh exprIds), not DataFrame aliases — same
-    // discipline as Dedup.prefixFilterPairs: a same-lineage self-join on
-    // `.as("a")/.as("b")` can silently resolve both condition sides to one
-    // plan branch and swap/flip the pair order
-    val lhs = capped.select(col("id").as("id_a"), col("fp").as("fp_a"),
-      col("band").as("band_a"), col("bucket").as("bucket_a"))
-    val rhs = capped.select(col("id").as("id_b"), col("fp").as("fp_b"),
-      col("band").as("band_b"), col("bucket").as("bucket_b"))
-    lhs.join(rhs,
-        col("band_a") === col("band_b") && col("bucket_a") === col("bucket_b") &&
-          col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b"), col("fp_a"), col("fp_b"))
-      .distinct()
-      .withColumn("hamming",
-        bit_count(col("fp_a").bitwiseXOR(col("fp_b"))).cast("int"))
-      .filter(col("hamming") <= maxHamming)
-      .select(col("id_a"), col("id_b"), col("hamming"))
   }
 }

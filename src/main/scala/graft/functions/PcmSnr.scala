@@ -62,7 +62,7 @@ case class PcmSnr(left: Expression, right: Expression)
 }
 
 /** Registration hooks: Column forms for the DataFrame API, and one SQL
-  * function table (`pcm_snr`, `pcm_stats`, `pcm_fingerprint`, `pcm_hum`)
+  * function table (`pcm_snr`, `pcm_stats`, `pcm_hum`)
   * registrable on a live session or injected through
   * `spark.sql.extensions=graft.functions.GraftExtensions`.
   */
@@ -79,12 +79,6 @@ object GraftFunctions {
   def pcmStats(bytes: Column): Column = {
     import org.apache.spark.sql.classic.ColumnConversions.toRichColumn
     org.apache.spark.sql.graft.ExpressionBridge.column(PcmStats(bytes.expr))
-  }
-
-  /** Column form of `pcm_fingerprint(bytes)` — 64-bit content fingerprint. */
-  def pcmFingerprint(bytes: Column): Column = {
-    import org.apache.spark.sql.classic.ColumnConversions.toRichColumn
-    org.apache.spark.sql.graft.ExpressionBridge.column(PcmFingerprint(bytes.expr))
   }
 
   /** Column wrapper for [[PcmHum]]: `pcm_hum(bytes, sr_hz)`. */
@@ -107,8 +101,6 @@ object GraftFunctions {
       PcmSnr(retypeNullLiteral(c(0)), retypeNullLiteral(c(1)))),
     sqlFunction("pcm_stats", classOf[PcmStats], "pcm_stats(bytes)", 1)(c =>
       PcmStats(retypeNullLiteral(c(0)))),
-    sqlFunction("pcm_fingerprint", classOf[PcmFingerprint], "pcm_fingerprint(bytes)", 1)(c =>
-      PcmFingerprint(retypeNullLiteral(c(0)))),
     sqlFunction("pcm_hum", classOf[PcmHum], "pcm_hum(bytes, sr_hz)", 2)(c =>
       PcmHum(retypeNullLiteral(c(0)), c(1))))
 

@@ -142,28 +142,3 @@ object PcmHum {
       Array[Any](a(0), a(1)))
   }
 }
-
-/** Native codegen expression `pcm_fingerprint(bytes)` → 64-bit
-  * energy-envelope content fingerprint ([[Pcm.energyFingerprint64]]).
-  * Null-propagating; a too-short payload yields 0, which downstream
-  * fingerprint joins must filter as unfingerprintable.
-  */
-case class PcmFingerprint(child: Expression) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == BinaryType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"pcm_fingerprint expects binary, got ${child.dataType.simpleString}")
-
-  override def dataType: DataType = LongType
-  override def prettyName: String = "pcm_fingerprint"
-
-  override protected def nullSafeEval(input: Any): Any =
-    Pcm.energyFingerprint64(input.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.audio.Pcm.energyFingerprint64($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): PcmFingerprint =
-    copy(child = newChild)
-}

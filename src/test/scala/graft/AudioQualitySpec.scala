@@ -5,8 +5,8 @@ import graft.audio.Pcm
 import graft.checks.{AudioQuality, CheckCompiler}
 import graft.functions.GraftFunctions
 
-/** Audio quality metrics (pcm_stats), energy fingerprint
-  * (pcm_fingerprint) and the AudioQuality rule set / near-dup pairs.
+/** Audio quality metrics (pcm_stats, pcm_hum) and the AudioQuality rule
+  * set.
   */
 class AudioQualitySpec extends SparkSpec {
   import spark.implicits._
@@ -62,16 +62,14 @@ class AudioQualitySpec extends SparkSpec {
     assert(!plan.contains("ScalaUDF"), s"expected native expression:\n$plan")
   }
 
-  test("pcm_stats / pcm_fingerprint register as SQL functions") {
+  test("pcm_stats registers as a SQL function") {
     GraftFunctions.register(spark)
     val healthy = Pcm.encode(Pcm.synthSignal(8000, 80, 200.0, 0.0))
     Seq((1L, healthy)).toDF("id", "bytes").createOrReplaceTempView("aq_view")
-    val r = spark.sql(
-      "SELECT pcm_stats(bytes).dbfs AS dbfs, pcm_fingerprint(bytes) AS fp FROM aq_view")
-      .head()
+    val r = spark.sql("SELECT pcm_stats(bytes).dbfs AS dbfs FROM aq_view").head()
     assert(r.getDouble(0) < 0.0 && r.getDouble(0) > -30.0)
-    assert(r.getLong(1) == Pcm.energyFingerprint64(healthy))
-    assert(spark.sql("SELECT pcm_fingerprint(NULL) AS fp").head().isNullAt(0))
+    assert(r.getDouble(0) == Pcm.statsKernel(healthy)(3))
+    assert(spark.sql("SELECT pcm_stats(NULL) AS st").head().isNullAt(0))
   }
 
   test("quality checks: clipped, dead and healthy clips classified") {
@@ -95,25 +93,6 @@ class AudioQualitySpec extends SparkSpec {
       .collect().map(r => (r.getString(0), r.getString(1))).toSet
     assert(ev == Set(("stray", "audio_payload_decodable"),
       ("hot", "audio_not_clipped"), ("dead", "audio_not_silent")))
-  }
-
-  test("energy fingerprint: noise-robust, content-sensitive") {
-    val base = Pcm.synthSignal(16000, 400, 440.0, 0.0)
-    // ±1 LSB dither (the bench's candidate noise model)
-    val dithered = base.zipWithIndex.map { case (s, i) =>
-      math.max(-32768, math.min(32767, s + (if (i % 2 == 0) 1 else -1))).toShort
-    }
-    val other = Pcm.synthSignal(16000, 400, 523.25, 1.0)
-    val fpBase = Pcm.energyFingerprint64(Pcm.encode(base))
-    val fpDith = Pcm.energyFingerprint64(Pcm.encode(dithered))
-    val fpOther = Pcm.energyFingerprint64(Pcm.encode(other))
-    assert(fpBase != 0L)
-    assert(java.lang.Long.bitCount(fpBase ^ fpDith) <= 3,
-      s"dither moved ${java.lang.Long.bitCount(fpBase ^ fpDith)} bits")
-    assert(java.lang.Long.bitCount(fpBase ^ fpOther) > 10,
-      s"different content only ${java.lang.Long.bitCount(fpBase ^ fpOther)} bits apart")
-    // too short to frame -> 0 (unfingerprintable)
-    assert(Pcm.energyFingerprint64(pcm(1, 2, 3)) == 0L)
   }
 
   test("humKernel: DC offset and Goertzel mains-hum detection, clean signal clean") {
@@ -251,22 +230,5 @@ class AudioQualitySpec extends SparkSpec {
     assert(ev.exists { case (c, p) => c == "transcript_nonempty_for_speech" && p == "p0000" })
     assert(ev.exists { case (c, p) => c == "transcript_rate_plausible" && p == "p0001" })
     ref.unpersist()
-  }
-
-  test("fingerprintPairs finds the dithered copy, skips unrelated clips") {
-    val base = Pcm.synthSignal(16000, 400, 440.0, 0.0)
-    val dithered = base.zipWithIndex.map { case (s, i) =>
-      math.max(-32768, math.min(32767, s + (if (i % 3 == 0) 1 else -1))).toShort
-    }
-    val rows = Seq(
-      ("c1", Pcm.encode(base)),
-      ("c2", Pcm.encode(dithered)),
-      ("c3", Pcm.encode(Pcm.synthSignal(16000, 400, 523.25, 1.0))),
-      ("c4", Pcm.encode(Pcm.synthSignal(16000, 400, 997.0, 2.0))),
-      ("c5", pcm(1, 2, 3)) // unfingerprintable, must be filtered
-    ).toDF("clip_id", "bytes")
-    val pairs = AudioQuality.fingerprintPairs(rows, "clip_id")
-      .collect().map(r => (r.getString(0), r.getString(1))).toSet
-    assert(pairs == Set(("c1", "c2")))
   }
 }

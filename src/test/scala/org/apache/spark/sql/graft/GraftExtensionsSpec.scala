@@ -17,7 +17,7 @@ class GraftExtensionsSpec extends graft.SparkSpec {
     GraftFunctions.register(fresh)
     val installed = fresh.sessionState.functionRegistry.listFunction().toSet -- before
     assert(installed.map(_.funcName) ===
-      Set("pcm_snr", "pcm_stats", "pcm_fingerprint", "pcm_hum"))
+      Set("pcm_snr", "pcm_stats", "pcm_hum"))
 
     val ext = new SparkSessionExtensions
     new GraftExtensions().apply(ext)
