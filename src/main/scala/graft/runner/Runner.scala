@@ -239,11 +239,14 @@ class ValidationSession(spark: SparkSession, cfg: ValidationConfig = ValidationC
     all.filter(c => on(c.name))
   }
 
-  /** The dimension's codecs, deduplicated on the driver: the dimension is
-    * small, and a distinct aggregate would cost a shuffle job per call.
+  /** The dimension's non-NULL codecs, deduplicated on the driver: the
+    * dimension is small, and a distinct aggregate would cost a shuffle job
+    * per call. A NULL in the set would make `NOT IN` NULL for every codec
+    * outside it, so no orphan would count; the modular anti-join never
+    * matches a NULL key either.
     */
   private def codecSetOf(dimCodec: DataFrame): Seq[String] =
-    dimCodec.select(col("codec")).collect().map(_.getString(0)).toSeq.distinct
+    dimCodec.select(col("codec")).collect().flatMap(r => Option(r.getString(0))).toSeq.distinct
 
   /** Full-outer ref↔cand join on (part_id, clip_id) — shuffle-free and
     * sort-free when both tables are bucketed/storage-partitioned on the

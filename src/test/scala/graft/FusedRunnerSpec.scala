@@ -125,4 +125,29 @@ class FusedRunnerSpec extends SparkSpec {
     assert(fused("dur_ms_ks_drift")._1 === "FAIL")
     ref.unpersist()
   }
+
+  test("fused codec_fk counts every orphan when the dimension holds a NULL codec") {
+    import org.apache.spark.sql.functions.col
+    val s = spark
+    import s.implicits._
+    val ref = Synth.clipsRef(spark, 3, 100, maxAudioMs = 400).cache()
+    // a NULL codec in the dimension matches nothing on the modular
+    // anti-join, and must not turn the fused NOT IN into NULL
+    val dim = Synth.dimCodec(spark)
+      .union(Seq(graft.model.CodecDim(null, "unknown", 0)).toDS()).toDF()
+    val cand = Seq("p0000", "p0001", "p0002").foldLeft(ref)(Mutations.unknownCodec)
+    val planted = cand.filter(col("codec") === "MUTATED").select("clip_id").as[String]
+      .collect().toSet
+    assert(planted.size === 3)
+    val sess = new ValidationSession(spark)
+    val modular = outcomesOf(sess.run(cand.toDF(), dim, Some(ref.toDF())))
+    val fused = outcomesOf(sess.runFused(cand.toDF(), dim, ref.toDF()))
+    assert(modular("codec_fk") === (("FAIL", 3L)))
+    assert(fused("codec_fk") === modular("codec_fk"))
+    val tagged = sess.fusedViolations(cand.toDF(), dim, ref.toDF())
+      .filter(col("check_name") === "codec_fk").select("clip_id").as[String]
+      .collect().toSet
+    assert(tagged === planted)
+    ref.unpersist()
+  }
 }
