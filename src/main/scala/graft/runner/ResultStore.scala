@@ -131,11 +131,14 @@ class ResultStore(spark: SparkSession, baseDir: String) {
   /** Per-suite summary rollup — the reference's validation_summary CSV
     * (`scripts/run_manual_experiments.py:353-415`): runs, checks totals,
     * AVG and STDDEV_POP of duration per suite, written as a single
-    * header-bearing CSV file (S5 report sink).
+    * header-bearing CSV file (S5 report sink) that replaces the directory
+    * `path`. The rollup has one row per suite, so the file is written on
+    * the driver; a local directory goes through java.nio (see
+    * [[LocalFiles]]).
     */
   def writeSummaryCsv(path: String): Unit = {
     import org.apache.spark.sql.functions._
-    validationRuns().groupBy(col("suite")).agg(
+    val summary = validationRuns().groupBy(col("suite")).agg(
       count(lit(1)).as("runs"),
       sum(col("checks_total")).as("checks_total"),
       sum(col("checks_failed")).as("checks_failed"),
@@ -144,8 +147,27 @@ class ResultStore(spark: SparkSession, baseDir: String) {
       min(col("finished_at")).as("first_finished_at"),
       max(col("finished_at")).as("last_finished_at"))
       .orderBy(col("suite"))
-      .coalesce(1)
-      .write.mode("overwrite").option("header", "true").csv(path)
+    val lines = summary.columns.toSeq +:
+      summary.collect().toSeq.map(_.toSeq.map(v => if (v == null) "" else v.toString))
+    val bytes = lines.map(_.map(ResultStore.csvField).mkString(",") + "\n").mkString
+      .getBytes(java.nio.charset.StandardCharsets.UTF_8)
+    val dir = new Path(path)
+    val conf = spark.sessionState.newHadoopConf()
+    LocalFiles.rawLocal(dir, conf) match {
+      case Some(fs) =>
+        val d = fs.pathToFile(dir)
+        LocalFiles.deleteTree(d)
+        val tmp = new java.io.File(d, ".part-00000.csv.tmp").toPath
+        val out = LocalFiles.create(tmp)
+        try out.write(bytes) finally out.close()
+        if (!LocalFiles.publish(tmp, new java.io.File(d, "part-00000.csv").toPath))
+          throw new java.io.IOException(s"summary csv: publish into $path failed")
+      case None =>
+        val fs = dir.getFileSystem(conf)
+        fs.delete(dir, true)
+        val out = fs.create(new Path(dir, "part-00000.csv"), false)
+        try out.write(bytes) finally out.close()
+    }
   }
 
   /** Per-check JSON dump for one report — the reference's per-suite JSON
@@ -259,4 +281,12 @@ object ResultStore {
     override def getWriteSupport(conf: org.apache.hadoop.conf.Configuration) =
       new ParquetWriteSupport()
   }
+
+  /** One CSV field as Spark's CSV writer emits it with default options: a
+    * field holding a comma, a quote or a line break is quoted, with `\`
+    * escaping quotes and backslashes inside.
+    */
+  private def csvField(s: String): String =
+    if (!s.exists(c => c == ',' || c == '"' || c == '\n' || c == '\r')) s
+    else "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
 }

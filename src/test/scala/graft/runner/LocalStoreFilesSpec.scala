@@ -3,8 +3,9 @@ package graft.runner
 import java.nio.file.Files
 import graft.model.CheckOutcome
 
-/** Checkpoint commits and result appends on a local directory write their
-  * files through java.nio: no call starts an OS process.
+/** Checkpoint commits, result appends and the summary CSV on a local
+  * directory write their files through java.nio: no call starts an OS
+  * process.
   */
 class LocalStoreFilesSpec extends graft.SparkSpec {
 
@@ -21,6 +22,7 @@ class LocalStoreFilesSpec extends graft.SparkSpec {
       store.markProcessing(todo, "v1")
       store.markDoneBulk(todo.map(p => (p, p == "p0", "{}")), "v1")
       todo.foreach(p => results.writeReport("r", p, report, 1L))
+      results.writeSummaryCsv(s"$dir/summary")
     }
     assert(procs == 0, s"$procs process(es) started by store bookkeeping")
     assert(store.readAll().collect().map(c => (c.part_id, c.status)).toSeq ==
@@ -28,5 +30,6 @@ class LocalStoreFilesSpec extends graft.SparkSpec {
     assert(results.checkResults().collect().map(_.part_id).sorted.toSeq == Seq("p0", "p1"))
     assert(new java.io.File(s"$dir/results/validation_run").list().forall(!_.startsWith(".")),
       "a temp file was left behind")
+    assert(new java.io.File(s"$dir/summary").list().toSeq == Seq("part-00000.csv"))
   }
 }

@@ -66,4 +66,25 @@ class ResultStoreSpec extends graft.SparkSpec {
     assert(evolved.length === runs.length + 1)
   }
 
+  test("writeSummaryCsv replaces the directory with the one file Spark's CSV writer would write") {
+    import graft.model.CheckOutcome
+    val dir = tmp()
+    val store = new ResultStore(spark, dir + "/results")
+    val odd = Seq("plain", "a,b", "say \"hi\"", "back\\slash \"q\"", "two\nlines")
+    store.writeReport("run1", "p0", ValidationReport(odd.zipWithIndex.map { case (s, i) =>
+      SuiteReport(s, Seq(CheckOutcome(s"c$i", "OutOfRange", "ERROR", "PASS", 0L)), 10L + i)
+    }), 1000L)
+    val csvDir = dir + "/summary"
+    store.writeSummaryCsv(csvDir)
+    store.writeSummaryCsv(csvDir) // replaces, as the overwrite mode did
+    assert(new java.io.File(csvDir).list().toSeq === Seq("part-00000.csv"))
+    val back = spark.read.option("header", "true").option("multiLine", "true").csv(csvDir)
+    assert(back.select("suite").collect().map(_.getString(0)).toSet === odd.toSet)
+    // Spark's writer, given the rows read back, writes the same text
+    val sparkDir = dir + "/spark_written"
+    back.orderBy("suite").coalesce(1).write.option("header", "true").csv(sparkDir)
+    def text(d: String) = new java.io.File(d).listFiles().filter(_.getName.endsWith(".csv"))
+      .map(f => java.nio.file.Files.readString(f.toPath)).mkString
+    assert(text(csvDir) === text(sparkDir))
+  }
 }
